@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from radient_spark.lineage import truncate
+from radient_spark.session import local_frame
 
 MAX_LEAF_SIZE = 200  # gann.py:15
 
@@ -556,8 +557,10 @@ class IvfIndex:
         """Probe the n_probes nearest cells per query, exact-rerank the
         candidates, window top-k. Candidates ~ n_probes * n/n_cells.
         The probed cell set is driver-known, so it is pushed into the
-        scan as a literal isin — static partition pruning over the
-        cell-partitioned index, like AnnIndex.search."""
+        scan as a literal `cell_id IN (...)`, parsed once — static
+        partition pruning over the cell-partitioned index, like
+        AnnIndex.search. The query frame is an Arrow LocalRelation
+        (session.local_frame), so no Python-worker job ships it."""
         spark = self.index_df.sparkSession
         hits = []
         for qid, vec in queries:
@@ -568,10 +571,14 @@ class IvfIndex:
                 q = _micro_np(q)
             for cell in _nearest_cells(q[None, :], self.centroids, n_probes)[0]:
                 hits.append((qid, int(cell), [float(x) for x in vec]))
-        qdf = spark.createDataFrame(hits, "qid long, cell_id int, qvec array<float>")
+        qdf = local_frame(spark, hits, "qid long, cell_id int, qvec array<float>")
         probed = sorted({cell for _, cell, _ in hits})
+        # one expression parse instead of a py4j call per literal; an
+        # empty probe set has no IN () form, and its join is empty anyway
         pruned = (
-            self.index_df.filter(F.col("cell_id").isin(probed))
+            self.index_df.filter(
+                F.expr(f"cell_id IN ({','.join(map(str, probed))})")
+            )
             if probed
             else self.index_df
         )
@@ -1331,9 +1338,11 @@ class AnnIndex:
         cross-tree id dedup -> per-query top-k.
 
         The hit list is known on the driver, so the (tree_id, leaf_id)
-        predicate is pushed into the scan as a LITERAL filter — the
-        partitioned index reads ONLY the touched leaf directories
-        (PartitionFilters, not a full-index scan + join).
+        predicate is pushed into the scan as a LITERAL filter, parsed
+        once — the partitioned index reads ONLY the touched leaf
+        directories (PartitionFilters, not a full-index scan + join).
+        The query frame is an Arrow LocalRelation (session.local_frame),
+        so no Python-worker job ships it.
 
         Returns (qid, id, score) with score descending per query.
         """
@@ -1354,19 +1363,18 @@ class AnnIndex:
                 q = _micro_np(q)
             for t, tree in enumerate(self.trees):
                 hits.append((qid, t, tree.descend(q), [float(x) for x in vec]))
-        qdf = spark.createDataFrame(
-            hits, "qid long, tree_id int, leaf_id int, qvec array<float>"
+        qdf = local_frame(
+            spark, hits, "qid long, tree_id int, leaf_id int, qvec array<float>"
         )
         leaves_by_tree: dict[int, set[int]] = {}
         for _, t, leaf, _ in hits:
             leaves_by_tree.setdefault(t, set()).add(leaf)
-        prune = None
-        for t, leaves in leaves_by_tree.items():
-            clause = (F.col("tree_id") == t) & F.col("leaf_id").isin(
-                *[int(x) for x in leaves]
-            )
-            prune = clause if prune is None else (prune | clause)
-        pruned = self.index_df.filter(prune) if prune is not None else self.index_df
+        # the per-tree OR-chain in one expression parse (see IvfIndex.search)
+        prune = " OR ".join(
+            f"(tree_id = {t} AND leaf_id IN ({','.join(map(str, sorted(leaves)))}))"
+            for t, leaves in leaves_by_tree.items()
+        )
+        pruned = self.index_df.filter(F.expr(prune)) if prune else self.index_df
         cand = pruned.join(
             F.broadcast(qdf),
             on=["tree_id", "leaf_id"],

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from radient_spark.lineage import truncate
+from radient_spark.session import local_frame
 
 END_MARK = "</w>"
 
@@ -165,7 +166,8 @@ def bpe_learn(
             vocab = vocab.withColumn(
                 "sym", _merge_fold(b["left_sym"], b["right_sym"])
             ).transform(truncate)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             merges,
             "round long, left_sym string, right_sym string, pair_count long",
         )

@@ -20,6 +20,7 @@ from radient_spark.lineage import truncate
 
 from radient_spark.functions import text as X
 from radient_spark.operators.dedup import str_hash
+from radient_spark.session import local_frame
 
 SPLIT_BUCKETS = 10_000
 
@@ -800,7 +801,8 @@ def distributed_ntile_grouped(
             "__dnt_key", "__dnt_pid"
         )
     strata_type = df.schema[strata_col].dataType.simpleString()
-    offsets = spark.createDataFrame(
+    offsets = local_frame(
+        spark,
         offset_rows,
         f"{strata_col} {strata_type}, __dnt_pid int, __dnt_off long,"
         " __dnt_n long",
@@ -958,11 +960,14 @@ def exact_group_quantiles(
                     break
                 acc += cells[p]
     if not targets:
-        return spark.createDataFrame(
-            [], f"{group_col} string, q double, value double"
+        return local_frame(
+            spark, [], f"{group_col} string, q double, value double"
         )
-    tdf = spark.createDataFrame(
-        targets, ["__g", "__pid", "__lrank", "q"]
+    tdf = local_frame(
+        spark,
+        targets,
+        f"__g {df.schema[group_col].dataType.simpleString()}, __pid bigint,"
+        " __lrank bigint, q double",
     )
     w = Window.partitionBy("__g", "__pid").orderBy("__v")
     picks = tdf.select(
@@ -1526,6 +1531,8 @@ def greedy_max_coverage(
             ).transform(truncate)
     finally:
         toks.unpersist()
-    return spark.createDataFrame(
-        picks, "round_no INT, doc_id BIGINT, gain BIGINT, covered_total BIGINT"
+    return local_frame(
+        spark,
+        picks,
+        "round_no INT, doc_id BIGINT, gain BIGINT, covered_total BIGINT",
     )

@@ -84,7 +84,9 @@ def frequent_pairs(
         ),
         eager=True,
     )
-    n_baskets = stats.filter(F.col("__g") == 1).first()["support"]
+    # an empty input has no grand-total row: zero baskets, no pairs
+    total = stats.filter(F.col("__g") == 1).first()
+    n_baskets = total["support"] if total is not None else 0
     frequent = stats.filter(
         (F.col("__g") == 0) & (F.col("support") >= min_support)
     ).select("item", "support")

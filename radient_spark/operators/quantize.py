@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from radient_spark.functions.vector import lit_doubles, lit_long_matrix, lit_longs
+from radient_spark.session import local_frame
 
 
 def sq8_minmax(df: DataFrame, vec_col: str = "embedding") -> list[tuple[float, float]]:
@@ -432,7 +433,7 @@ def sq8_topk_batch(
         )
         for qid, vec in queries
     ]
-    qdf = spark.createDataFrame(wrows, "qid long, __w array<double>")
+    qdf = local_frame(spark, wrows, "qid long, __w array<double>")
     score = (
         F.aggregate(
             F.zip_with(

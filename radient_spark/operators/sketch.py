@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from radient_spark.session import local_frame
+
 
 def hll_alpha(m: int) -> float:
     """Bias-correction constant (published values for m >= 128)."""
@@ -417,7 +419,7 @@ def hist_quantiles(
         ),
     )
     spark = sketch.sparkSession
-    qdf = spark.createDataFrame(qs, "quantile string, num long, den long")
+    qdf = local_frame(spark, qs, "quantile string, num long, den long")
     hit = (
         cum.crossJoin(F.broadcast(qdf))
         # target = ceil(num*n/den) in pure integers

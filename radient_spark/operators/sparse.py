@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from radient_spark.session import local_frame
+
 
 def sparse_count_vectors(
     df: DataFrame,
@@ -116,8 +118,8 @@ def sparse_terms_long(
     value != 0 — the join-able / oracle-checkable view of the sparse
     matrix. The vocabulary rides along as a broadcast slot->term dim."""
     spark = df.sparkSession
-    vocab_df = spark.createDataFrame(
-        list(enumerate(vocabulary)), "slot int, __term string"
+    vocab_df = local_frame(
+        spark, list(enumerate(vocabulary)), "slot int, __term string"
     )
     exploded = (
         df.select(F.col(id_col), F.posexplode(sparse_to_array(F.col(vec_col))))

@@ -19,6 +19,8 @@ from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame
 
+from radient_spark.session import local_frame
+
 Node = Callable[..., DataFrame]
 
 
@@ -106,4 +108,6 @@ def flattened_rows(spark, **columns) -> DataFrame:
             raise ValueError(f"column {k!r} has no values to cycle")
     maxlen = max(len(v) for v in vals.values())
     rows = list(zip(*[list(islice(cycle(v), maxlen)) for v in vals.values()]))
-    return spark.createDataFrame(rows, schema=list(vals.keys()))
+    # the column types createDataFrame infers from the Python values
+    schema = spark._inferSchemaFromList(rows, names=list(vals.keys()))
+    return local_frame(spark, rows, schema)

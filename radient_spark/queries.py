@@ -26,6 +26,7 @@ from radient_spark.functions import vector as V
 from radient_spark.operators import dedup as D
 from radient_spark.operators.asof import asof_join
 from radient_spark.operators.topk import knn_join, similarity_self_join, topk
+from radient_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -1767,7 +1768,7 @@ def q_fingerprint_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     query_name = "red widget"
     qfp_row = fingerprint_vectorizer(
-        spark.createDataFrame([(query_name,)], "p_name string"),
+        local_frame(spark, [(query_name,)], "p_name string"),
         input_col="p_name",
         out_col="fp",
         dim=128,
@@ -5497,9 +5498,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rel").desc(), F.col("vec_id").asc()
     ).limit(50)
     chosen = mmr_rerank(shortlist, QUERY_VEC_MILLI, k=10)
-    return spark.createDataFrame(
-        chosen, "mmr_rank int, vec_id long, marginal long"
-    )
+    return local_frame(spark, chosen, "mmr_rank int, vec_id long, marginal long")
 
 
 _QV_MILLI_SQL = (
@@ -11006,7 +11005,8 @@ def q_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     queries = [(int(r["vec_id"]), list(r["embedding"])) for r in rows]
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(q, [float(x) for x in v]) for q, v in queries],
         "qid long, qvec array<float>",
     )

@@ -1,4 +1,5 @@
-"""SparkSession builder tuned for the driver's local[N] harness.
+"""SparkSession builder tuned for the driver's local[N] harness, and the
+one way driver-side rows become a DataFrame (`local_frame`).
 
 On a real cluster the same builder is used with master/memory supplied by
 spark-submit; only the local-mode fallbacks below differ.
@@ -6,9 +7,12 @@ spark-submit; only the local-mode fallbacks below differ.
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_session(app_name: str = "radient_spark") -> SparkSession:
@@ -60,3 +64,38 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence, schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows as an Arrow-backed LocalRelation.
+
+    Same schema and rows as ``spark.createDataFrame(rows, schema)``, but
+    that call plans a ``Scan ExistingRDD`` over a Python RDD, so every
+    action on the frame runs one Python-worker task per core just to
+    unpickle a handful of rows. Shipping the rows as one Arrow table
+    instead yields a ``LocalRelation``: no Python workers, and the
+    planner sees the frame's real size.
+
+    Naive ``datetime`` values in ``timestamp`` columns are read as local
+    wall-clock time, exactly as ``createDataFrame`` reads them; a bare
+    Arrow table would read them as UTC instead.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    arrays = []
+    for values, field in zip(columns, arrow_schema):
+        if pa.types.is_timestamp(field.type) and field.type.tz is not None:
+            values = [
+                v if v is None else v.astimezone(_dt.timezone.utc) for v in values
+            ]
+        arrays.append(pa.array(values, type=field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from radient_spark.session import local_frame
+
 
 def local_source(
     spark: SparkSession, path: str, recursive: bool = True
@@ -119,7 +121,7 @@ class YoutubeIncrementalSource:
         paths = []
         while (p := self.read()) is not None:
             paths.append((p,))
-        return spark.createDataFrame(paths, "path string")
+        return local_frame(spark, paths, "path string")
 
 
 def youtube_source(
@@ -144,4 +146,4 @@ def youtube_source(
         entries = info.get("entries") or [info]
         for ent in entries:
             paths.append((ent["id"], f"{output_directory}/{ent['id']}.mp4"))
-    return spark.createDataFrame(paths, "video_id string, path string")
+    return local_frame(spark, paths, "video_id string, path string")

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from radient_spark.session import local_frame
+
 _COMPACT_EVERY = 16  # first-arrival claim-log deltas folded into base every N batches
 _N_STATE_BUCKETS = 64  # base/ partition fan-out; probe prunes to batch buckets
 # Partition-prune the base probe only once base/ outgrows this: below it
@@ -1005,7 +1007,8 @@ def late_data_audit_sink(
             if prev_max is not None and agg["batch_max"] is not None
             else (agg["batch_max"] or prev_max)
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(epoch_id), agg["n_rows"], agg["n_late"] or 0,
               prev_max, new_max)],
             "epoch long, n_rows long, n_late long,"
@@ -1014,7 +1017,7 @@ def late_data_audit_sink(
         # crash between the log append and this commit can duplicate a
         # log row on replay — rows carry `epoch`, so readers dedupe
         _commit_state(
-            spark.createDataFrame([(new_max,)], "max_ts timestamp").coalesce(1),
+            local_frame(spark, [(new_max,)], "max_ts timestamp").coalesce(1),
             f"{audit_dir}/state",
             tag,
             epoch_id,

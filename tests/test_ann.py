@@ -583,3 +583,59 @@ def test_build_partition_width_bounded(spark, emb):
     lat = AnnIndex.build_lattice(emb.repartition(8), n_trees=2, levels=2, seed=42)
     got_lat = lat.index_df.rdd.getNumPartitions()
     assert got_lat <= target, (got_lat, target)
+
+
+def _build_saved(kind, emb, path):
+    from radient_spark.ann import IvfIndex
+
+    if kind == "ivf":
+        IvfIndex.build(emb, n_cells=8, seed=42).save(path)
+        return IvfIndex.load(emb.sparkSession, path), {"n_probes": 2}
+    if kind == "lattice":
+        idx = AnnIndex.build_lattice(emb, n_trees=2, levels=2, seed=42)
+    else:
+        idx = AnnIndex.build(emb, n_trees=4, max_leaf_size=100, seed=42)
+    idx.save(path)
+    return AnnIndex.load(emb.sparkSession, path), {}
+
+
+@pytest.mark.parametrize("kind", ["forest", "lattice", "ivf"])
+def test_list_search_plan_is_local_and_pruned(spark, emb, tmp_path, monkeypatch, kind):
+    """List search ships its query frame as a LocalRelation (no Python-
+    RDD scan, so no Python-worker job per search), and the probed cells
+    or (tree, leaf) pairs still reach the index scan as PartitionFilters.
+    search([]) is an empty, typed frame: the one-parse probe predicate
+    has no `IN ()` form, so the empty probe set must skip it."""
+    import re
+
+    import radient_spark.ann as ann_mod
+    from radient_spark.plans import formatted_plan
+
+    idx, kw = _build_saved(kind, emb, str(tmp_path / kind))
+    shipped, real = [], ann_mod.local_frame
+
+    def spy(spark_, rows, ddl):
+        shipped.extend(rows)
+        return real(spark_, rows, ddl)
+
+    monkeypatch.setattr(ann_mod, "local_frame", spy)
+    qs = [(int(r["id"]), list(r["vector"])) for r in emb.take(3)]
+    res = idx.search(qs, k=5, **kw)
+    assert shipped
+    plan = formatted_plan(res)
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+
+    filters = " ".join(l for l in plan.splitlines() if "PartitionFilters" in l)
+    ints = {int(x) for x in re.findall(r"\b\d+\b", re.sub(r"#\d+", "", filters))}
+    if kind == "ivf":
+        probed = {row[1] for row in shipped}
+        assert "cell_id" in filters and probed <= ints, (probed, filters)
+    else:
+        leaves = {row[2] for row in shipped}
+        assert "tree_id" in filters and "leaf_id" in filters, filters
+        assert leaves <= ints, (leaves, filters)
+    assert {r["qid"] for r in res.collect()} == {q for q, _ in qs}
+
+    empty = idx.search([], k=5, **kw)
+    assert empty.schema.simpleString() == "struct<qid:bigint,id:bigint,score:double>"
+    assert empty.count() == 0

@@ -3,6 +3,7 @@ parameters, single-row tables — the inputs a pipeline hits at 3am."""
 
 from __future__ import annotations
 
+import datetime
 import math
 
 import pytest
@@ -539,3 +540,77 @@ def test_dataset_card_empty_and_dup_sources(spark, tmp_path):
     assert out["empty_src"]["dup_ppm"] == 0  # '' vs ' ' differ as bytes
     assert out["dup_src"]["n_dup_docs"] == 2
     assert out["dup_src"]["dup_ppm"] == 666666
+
+
+_NAIVE_TS = datetime.datetime(2024, 3, 1, 12, 30, 1)
+
+
+@pytest.mark.parametrize(
+    "ddl, rows",
+    [
+        ("a bigint, b int", [(1, 2), (None, None), (2**40, -7)]),
+        ("x double, s string", [(1.5, "a"), (None, None), (-0.0, "")]),
+        (
+            "qid long, v array<float>, w array<double>",
+            [(1, [1.0, 0.5], [2.0]), (2, None, [None, 1.0]), (3, [], None)],
+        ),
+        ("t timestamp", [(_NAIVE_TS,), (None,)]),
+        ("a bigint, v array<float>", []),
+    ],
+    ids=["ints", "double-string", "arrays", "timestamp", "zero-rows"],
+)
+def test_local_frame_matches_create_dataframe(spark, monkeypatch, ddl, rows):
+    """local_frame is createDataFrame(rows, ddl) as a LocalRelation:
+    same schema, same rows (nulls included), no Python RDD. Naive
+    datetimes are local wall-clock time in both, so a process time zone
+    far from the session's (UTC) must not shift the instant."""
+    import time
+
+    from radient_spark.session import local_frame
+
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    try:
+        got = local_frame(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema
+        instants = [f"cast({c} as string)" for c in want.columns]
+        assert got.selectExpr(*instants).collect() == want.selectExpr(
+            *instants
+        ).collect()
+        assert got.collect() == want.collect()
+        analyzed = got._jdf.queryExecution().analyzed()
+        assert analyzed.getClass().getSimpleName() == "LocalRelation"
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_driver_rows_only_ship_through_local_frame():
+    """Every driver-built frame in the package goes through
+    session.local_frame: a direct createDataFrame(<rows>) plans a
+    Python-RDD scan that costs a Python-worker job on every action."""
+    import ast
+    import pathlib
+
+    import radient_spark
+
+    root = pathlib.Path(radient_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+            for n in ast.walk(fn)
+        }
+        offenders += [
+            f"{path.relative_to(root.parent)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+            and id(n) not in allowed
+        ]
+    assert not offenders, offenders

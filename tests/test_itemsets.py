@@ -74,6 +74,14 @@ def test_frequent_pairs_rejects_bad_min_support(spark):
         frequent_pairs(df, "basket", "item", min_support=0)
 
 
+def _plan_nodes(node):
+    """Pre-order walk of a JVM (Catalyst) plan tree."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
 def test_frequent_pairs_prunes_before_roster(spark):
     """Round-13 fan-out guard: infrequent items are semi-join-pruned
     BEFORE the roster collect_set (Apriori downward closure), so a hub
@@ -84,11 +92,25 @@ def test_frequent_pairs_prunes_before_roster(spark):
         frequent_pairs(df, "basket", "item", min_support=2)
         ._jdf.queryExecution()
         .optimizedPlan()
-        .toString()
     )
-    assert "LeftSemi" in plan, plan
-    # Printed tree order is parent-then-children: the roster aggregate
-    # (collect_set) must be ABOVE the semi-join, i.e. the prune feeds it.
-    agg_at = plan.index("collect_set")
-    semi_at = plan.index("LeftSemi")
-    assert semi_at > agg_at, plan
+    rosters = [
+        n
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "Aggregate"
+        and "collect_set" in n.aggregateExpressions().toString()
+    ]
+    assert len(rosters) == 1, plan.toString()
+    # the prune feeds the roster: the semi-join sits in its subtree
+    assert any(
+        n.nodeName() == "Join" and n.joinType().toString() == "LeftSemi"
+        for n in _plan_nodes(rosters[0])
+    ), plan.toString()
+
+
+def test_frequent_pairs_empty_input(spark):
+    """No baskets -> an empty, typed result (not a driver TypeError)."""
+    ddl = "basket long, item string"
+    got = frequent_pairs(spark.createDataFrame([], ddl), "basket", "item")
+    want = frequent_pairs(spark.createDataFrame(ROWS, ddl), "basket", "item")
+    assert got.schema == want.schema
+    assert got.count() == 0
