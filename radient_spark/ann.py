@@ -116,19 +116,42 @@ class _dynamic_partition_overwrite:
         )
 
 
+# Rerank scores over the fixed `vector` and `qvec` columns as SQL text,
+# so a search parses its score in one call instead of building it
+# through the Python lambda API (~300 py4j round trips). Each is the
+# same expression tree as its functions/vector builder (cosine_similarity,
+# dot, -l2_distance), hence bit-equal; doubles are written `0.0D`
+# because a bare `0.0` parses as DECIMAL.
+_DOT_SQL = (
+    "aggregate(zip_with(vector, qvec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+    "0.0D, (acc, x) -> acc + x)"
+)
+
+
+def _norm_sql(col: str) -> str:
+    return (
+        f"sqrt(aggregate({col}, 0.0D, "
+        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    )
+
+
+_RERANK_SCORE_SQL = {
+    "cosine": f"{_DOT_SQL} / ({_norm_sql('vector')} * {_norm_sql('qvec')})",
+    "dot": _DOT_SQL,
+    "l2": (
+        "-sqrt(aggregate(zip_with(vector, qvec, "
+        "(x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE)), "
+        "0.0D, (acc, x) -> acc + x * x))"
+    ),
+}
+
+
 def _rerank_topk(cand: DataFrame, k: int, metric: str) -> DataFrame:
     """Shared exact-rerank tail: score candidates, per-query window top-k
     with the deterministic (score desc, id asc) criterion."""
-    from radient_spark.functions import vector as V
-
-    if metric == "cosine":
-        score = V.cosine_similarity(F.col("vector"), F.col("qvec"))
-    elif metric == "dot":
-        score = V.dot(F.col("vector"), F.col("qvec"))
-    elif metric == "l2":
-        score = -V.l2_distance(F.col("vector"), F.col("qvec"))
-    else:
+    if metric not in _RERANK_SCORE_SQL:
         raise ValueError(f"unknown metric {metric!r}")
+    score = F.expr(_RERANK_SCORE_SQL[metric])
     scored = cand.withColumn("score", F.round(score, 6))
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id").asc())
     return (

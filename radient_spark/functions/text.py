@@ -17,8 +17,11 @@ def _c(col: Column | str) -> Column:
 
 
 def tokens(text: Column | str) -> Column:
-    """Whitespace tokens; empty/blank text yields an empty array."""
-    t = F.trim(_c(text))
+    """Whitespace tokens; empty/blank text yields an empty array. A column
+    name is built in one SQL parse (`tokens_sql`)."""
+    if isinstance(text, str):
+        return F.expr(tokens_sql(sql_ident(text)))
+    t = F.trim(text)
     return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
         F.split(t, r"\s+")
     )
@@ -28,38 +31,48 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column | str) -> Column:
-    return F.length(_c(text))
+def sql_ident(name: str) -> str:
+    """A column name as a SQL identifier: backtick-quoted, with any
+    backtick inside the name doubled, so the text parses back to exactly
+    that name."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def avg_token_length(text: Column | str) -> Column:
-    tk = tokens(text)
-    total = F.aggregate(tk, F.lit(0), lambda acc, x: acc + F.length(x))
-    return F.when(F.size(tk) == 0, F.lit(0.0)).otherwise(
-        total.cast("double") / F.size(tk).cast("double")
+def tokens_sql(text: str) -> str:
+    """SQL text of `tokens` over the string SQL expression `text`."""
+    return (
+        f"CASE WHEN length(trim({text})) = 0 THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split(trim({text}), '\\\\s+') END"
     )
 
 
-def shingles_from_tokens(tk: Column, k: int = 3) -> Column:
-    """k-word shingles from an existing token-array column.
+def shingles_sql(tk: str, k: int = 3) -> str:
+    """SQL text of k-word shingles over the token-array SQL expression
+    `tk`: no tokens -> [], fewer than k -> the whole text as one shingle,
+    else every k-token window. Rendered from the integer k, so `F.expr`
+    parses the whole lambda-bearing expression in one call."""
+    k = int(k)
+    return (
+        f"CASE WHEN size({tk}) = 0 THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE CASE WHEN size({tk}) < {k} THEN array(array_join({tk}, ' ')) "
+        f"ELSE transform(sequence(1, size({tk}) - {k - 1}), "
+        f"i -> array_join(slice({tk}, i, {k}), ' ')) END END"
+    )
+
+
+def shingles_from_tokens(tk: str, k: int = 3) -> Column:
+    """k-word shingles from an existing token-array column, given by
+    name; the expression is built in one SQL parse (`shingles_sql`).
 
     IMPORTANT for plan shape: pass a *materialized column* (withColumn),
     not the tokens() expression inline — Catalyst inlines lambda-captured
     expressions, so an inline tokens() would re-split the text once per
     shingle (O(T^2) per doc).
     """
-    n = F.size(tk)
-    full = F.array(F.array_join(tk, " "))
-    windows = F.transform(
-        F.sequence(F.lit(1), n - F.lit(k - 1)),
-        lambda i: F.array_join(F.slice(tk, i, k), " "),
-    )
-    return F.when(n == 0, F.array().cast("array<string>")).otherwise(
-        F.when(n < k, full).otherwise(windows)
-    )
+    return F.expr(shingles_sql(sql_ident(tk), k))
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
+def word_shingles(text: str, k: int = 3) -> Column:
     """k-word shingles as strings — the unit for MinHash / n-gram Jaccard.
 
     tokens = [a,b,c,d], k=3 -> ["a b c", "b c d"]; fewer than k tokens ->
@@ -67,7 +80,7 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     Prefer staging tokens via withColumn + shingles_from_tokens in hot
     paths (see that function's docstring).
     """
-    return shingles_from_tokens(tokens(text), k)
+    return F.expr(shingles_sql(f"({tokens_sql(sql_ident(text))})", k))
 
 
 def char_ngrams(text: Column | str, n: int = 3) -> Column:
@@ -90,14 +103,6 @@ def alpha_ratio(text: Column | str) -> Column:
     n_alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
     return F.when(F.length(t) == 0, F.lit(0.0)).otherwise(
         n_alpha.cast("double") / F.length(t).cast("double")
-    )
-
-
-def digit_punct_ratio(text: Column | str) -> Column:
-    t = _c(text)
-    n = F.length(F.regexp_replace(t, r"[^0-9\.,;:!\?]", ""))
-    return F.when(F.length(t) == 0, F.lit(0.0)).otherwise(
-        n.cast("double") / F.length(t).cast("double")
     )
 
 

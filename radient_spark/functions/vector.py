@@ -101,14 +101,6 @@ def l2_distance(a: Column | str, b: Column | str) -> Column:
     return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def sq_l2_distance(a: Column | str, b: Column | str) -> Column:
-    """Squared euclidean — same ordering as l2 without the sqrt."""
-    diff = F.zip_with(
-        _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
-
-
 def l2_normalize(a: Column | str) -> Column:
     """Unit-normalize; zero vectors pass through unchanged (the reference
     would emit NaNs — we follow the safer convention and document it)."""

@@ -27,6 +27,7 @@ plans are unchanged unless the env var is set.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 
@@ -49,8 +50,31 @@ def truncate(df: DataFrame, eager: bool = False) -> DataFrame:
     sc = df.sparkSession.sparkContext
     # First set wins for the session: setCheckpointDir mints a fresh
     # random subdirectory on every call, so re-setting per round would
-    # scatter checkpoint files (the resolved dir also carries a scheme,
-    # so it never compares equal to the raw env value).
-    if sc.getCheckpointDir() is None:
+    # scatter checkpoint files. A different directory asked for later
+    # is therefore not honored, and says so.
+    current = sc.getCheckpointDir()
+    if current is None:
         sc.setCheckpointDir(d)
+    else:
+        _warn_if_elsewhere(sc, current, d)
     return df.checkpoint(eager=eager)
+
+
+def _warn_if_elsewhere(sc, current: str, wanted: str) -> None:
+    """Warn when the context already checkpoints outside ``wanted``.
+    ``current`` is the scheme-qualified ``<dir>/<uuid>`` that
+    setCheckpointDir resolved, so compare its parent with ``wanted``
+    qualified the same way."""
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    p = Path(wanted)
+    qualified = p.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(p)
+    in_use = Path(current).getParent().toString()
+    if qualified.toString() != in_use:
+        warnings.warn(
+            f"SPARK_GRAFT_CHECKPOINT_DIR is {wanted!r}, but this SparkContext "
+            f"already checkpoints under {in_use!r} and Spark keeps one "
+            "checkpoint directory per context; reliable checkpoints keep "
+            "going there",
+            RuntimeWarning,
+            stacklevel=3,
+        )

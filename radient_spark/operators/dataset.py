@@ -165,7 +165,7 @@ def ngram_hash_set(
     staged = stage(df, __dc_toks=X.tokens(F.col(text_col)))
     hs = F.array_distinct(
         F.transform(
-            X.shingles_from_tokens(F.col("__dc_toks"), n),
+            X.shingles_from_tokens("__dc_toks", n),
             lambda g: str_hash(g),
         )
     )
@@ -523,7 +523,7 @@ def _hashed_features(
     # re-tokenize the corpus once per branch
     both = F.concat(
         F.col("__ds_toks"),
-        X.shingles_from_tokens(F.col("__ds_toks"), 2),
+        X.shingles_from_tokens("__ds_toks", 2),
     )
     return staged.select(
         F.col(id_col), *extra, F.explode(both).alias("feat")

@@ -63,26 +63,25 @@ def str_hash120(col) -> tuple[F.Column, F.Column]:
     )
 
 
-def minhash_from_hashes(hashes_col: F.Column, num_hashes: int) -> F.Column:
+def minhash_from_hashes(hashes_col: str, num_hashes: int) -> F.Column:
     """sig[i] = min over shingle hashes h of (a_i*h + b_i) mod P; sentinel P
     for empty docs so they never collide with real content.
 
-    `hashes_col` must be a materialized column reference (see
-    with_minhash): this expression references it num_hashes times, and
-    Catalyst would otherwise inline + recompute the whole shingle->md5
-    pipeline per permutation.
+    `hashes_col` names a materialized column (see with_minhash): this
+    expression references it num_hashes times, and Catalyst would
+    otherwise inline + recompute the whole shingle->md5 pipeline per
+    permutation. The num_hashes permutations are rendered as SQL text
+    from their integer parameters and parsed in one call (the Python
+    lambda API spends ~100 py4j round trips per permutation); integer
+    literals parse to the same INT types F.lit gives them.
     """
-    def perm(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P
-
-    mins = [
-        F.coalesce(
-            F.array_min(F.transform(hashes_col, perm(a, b))),
-            F.lit(MINHASH_P),
-        )
+    hs = X.sql_ident(hashes_col)
+    mins = ", ".join(
+        f"coalesce(array_min(transform({hs}, h -> ({a} * h + {b}) % {MINHASH_P})), "
+        f"{MINHASH_P})"
         for a, b in hash_params(num_hashes)
-    ]
-    return F.array(*mins)
+    )
+    return F.expr(f"array({mins})")
 
 
 def with_minhash(
@@ -103,16 +102,18 @@ def with_minhash(
     # windows slice it (else each window re-splits the text), and the
     # hash array must be an attribute before the signature references it
     # per permutation
-    staged = stage(df, __mh_toks=X.tokens(F.col(text_col)))
+    staged = stage(df, __mh_toks=X.tokens(text_col))
+    shingles = X.shingles_sql(X.sql_ident("__mh_toks"), shingle_k)
     staged = stage(
         staged,
-        __mh_hs=F.transform(
-            X.shingles_from_tokens(F.col("__mh_toks"), shingle_k),
-            lambda s: str_hash(s) % MINHASH_P,
+        # str_hash(s) % P per shingle, as SQL text
+        __mh_hs=F.expr(
+            f"transform({shingles}, s -> "
+            f"CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT) % {MINHASH_P})"
         ),
     )
     return staged.withColumn(
-        out_col, minhash_from_hashes(F.col("__mh_hs"), num_hashes)
+        out_col, minhash_from_hashes("__mh_hs", num_hashes)
     ).drop("__mh_toks", "__mh_hs")
 
 
@@ -127,18 +128,26 @@ def _validate_banding(bands: int, num_hashes: int | None) -> None:
         )
 
 
-def _band_key_expr(sig_col: str, i: int, bands: int) -> F.Column:
-    """Band i's key: the '_'-joined slice of the signature (equal-width
-    banding). Shared by the pair join, the bucket explode, and the SQL
-    oracles (which slice sig[i*r+1:(i+1)*r] identically)."""
-    width = (F.size(F.col(sig_col)) / bands).cast("int")
-    return F.array_join(
-        F.transform(
-            F.slice(F.col(sig_col), F.lit(i) * width + 1, width),
-            lambda x: x.cast("string"),
-        ),
-        "_",
+def _band_key_sql(sig_col: str, i: int, bands: int) -> str:
+    """SQL text of band i's key: the '_'-joined slice of the signature
+    (equal-width banding). Shared by the pair join and the bucket
+    explode; the SQL oracles slice sig[i*r+1:(i+1)*r] identically.
+    `sig_col` is quoted, so any column name round-trips."""
+    sig = X.sql_ident(sig_col)
+    width = f"CAST(size({sig}) / {int(bands)} AS INT)"
+    return (
+        f"array_join(transform(slice({sig}, {int(i)} * {width} + 1, {width}), "
+        "x -> CAST(x AS STRING)), '_')"
     )
+
+
+def _band_structs_sql(sig_col: str, bands: int) -> str:
+    """SQL text of array(struct(band_idx, band_key), ...) over all bands
+    — the explode input of the bucket and pair builders."""
+    return "array(" + ", ".join(
+        f"struct({i} AS band_idx, {_band_key_sql(sig_col, i, bands)} AS band_key)"
+        for i in range(bands)
+    ) + ")"
 
 
 def lsh_buckets(
@@ -151,21 +160,11 @@ def lsh_buckets(
     """Explode signatures into (id, band_idx, band_key) bucket rows —
     the unit of LSH state. n_rows x bands tiny tuples; every downstream
     shuffle (ownership groupBy, collision join) rides on these keys,
-    never on document text."""
+    never on document text. The band keys are parsed in one call."""
     _validate_banding(bands, num_hashes)
     return sigs.select(
         F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        _band_key_expr(sig_col, i, bands).alias("band_key"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("__b"),
+        F.explode(F.expr(_band_structs_sql(sig_col, bands))).alias("__b"),
     ).select(id_col, "__b.band_idx", "__b.band_key")
 
 
@@ -281,19 +280,36 @@ def lsh_first_arrival_flags(
     (the ownership exchange is reused), and a groupBy over flagged ids.
     Never all-pairs, never a self-join over text. Skewed boilerplate
     buckets are split by AQE skew handling."""
+    return first_arrival_flags_from_buckets(
+        lsh_text_buckets(df, id_col, text_col, num_hashes, shingle_k, bands),
+        id_col,
+    )
+
+
+def lsh_text_buckets(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 16,
+    shingle_k: int = 3,
+    bands: int = 4,
+) -> DataFrame:
+    """(id, band_idx, band_key) LSH buckets of the non-blank documents:
+    MinHash then banding — the per-batch bucket frame of
+    streaming.lsh_dedup_sink and of its batch replay above. Every
+    lambda-bearing part is parsed from SQL text in one call, so the
+    frame is built in a few hundred py4j round trips."""
     sigs = with_minhash(
-        df.filter(F.length(F.trim(text_col)) > 0).select(id_col, text_col),
+        df.filter(F.expr(f"length(trim({X.sql_ident(text_col)})) > 0"))
+        .select(id_col, text_col),
         text_col=text_col,
         num_hashes=num_hashes,
         shingle_k=shingle_k,
         out_col="__sig",
     ).select(id_col, "__sig")
-    return first_arrival_flags_from_buckets(
-        lsh_buckets(
-            sigs, id_col=id_col, sig_col="__sig", bands=bands,
-            num_hashes=num_hashes,
-        ),
-        id_col,
+    return lsh_buckets(
+        sigs, id_col=id_col, sig_col="__sig", bands=bands,
+        num_hashes=num_hashes,
     )
 
 
@@ -319,24 +335,13 @@ def lsh_pairs_from_signatures(
     """
     _validate_banding(bands, num_hashes)
 
-    def band_key(i):
-        return _band_key_expr(sig_col, i, bands)
-
     # every band key rides along so the join can apply the
     # first-collision rule (see below) without a second lookup
+    keys = ", ".join(_band_key_sql(sig_col, i, bands) for i in range(bands))
     banded = sigs.select(
         F.col(id_col).alias("__id"),
-        F.array(*[band_key(i) for i in range(bands)]).alias("__keys"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"), band_key(i).alias("band_key")
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("b"),
+        F.expr(f"array({keys})").alias("__keys"),
+        F.explode(F.expr(_band_structs_sql(sig_col, bands))).alias("b"),
     ).select("__id", "__keys", "b.band_idx", "b.band_key")
     left = banded.alias("l")
     right = banded.alias("r")
@@ -344,15 +349,13 @@ def lsh_pairs_from_signatures(
     # would otherwise surface k times and pay a dedup shuffle over the
     # whole candidate set; requiring every EARLIER band to differ emits
     # each pair from exactly one band
-    first_collision = F.lit(True)
-    for j in range(bands - 1):
-        first_collision = first_collision & (
-            (F.col("l.band_idx") <= j)
-            | (
-                F.element_at(F.col("l.__keys"), j + 1)
-                != F.element_at(F.col("r.__keys"), j + 1)
-            )
-        )
+    first_collision = F.expr(" AND ".join(
+        ["true"] + [
+            f"(l.band_idx <= {j} OR "
+            f"element_at(l.__keys, {j + 1}) <> element_at(r.__keys, {j + 1}))"
+            for j in range(bands - 1)
+        ]
+    ))
     pairs = (
         left.join(
             right,
@@ -390,12 +393,14 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_jaccard_estimate(sig_a, sig_b) -> F.Column:
-    """Estimated Jaccard = fraction of matching signature slots."""
-    eq = F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int"))
-    return F.aggregate(eq, F.lit(0), lambda acc, x: acc + x).cast("double") / F.size(
-        sig_a
-    ).cast("double")
+def minhash_jaccard_estimate(sig_a: str, sig_b: str) -> F.Column:
+    """Estimated Jaccard = fraction of matching signature slots, over two
+    signature columns given by name (one SQL parse)."""
+    a, b = X.sql_ident(sig_a), X.sql_ident(sig_b)
+    return F.expr(
+        f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> CAST(x = y AS INT)), 0, "
+        f"(acc, x) -> acc + x) AS DOUBLE) / CAST(size({a}) AS DOUBLE)"
+    )
 
 
 def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -556,7 +561,7 @@ def repeated_ngram_coverage(
     from radient_spark.functions.stage import stage
 
     staged = stage(df, __rs_toks=X.tokens(F.col(text_col))).withColumn(
-        "__rs_grams", X.shingles_from_tokens(F.col("__rs_toks"), n)
+        "__rs_grams", X.shingles_from_tokens("__rs_toks", n)
     )
     pos = (
         staged.select(

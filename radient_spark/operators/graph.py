@@ -62,14 +62,21 @@ def _roster_salts() -> int:
     return max(1, s)
 
 
-def _roster(pairs: DataFrame, key: str, val: str, agg, out: str) -> DataFrame:
+def _roster(
+    pairs: DataFrame, key: str, val: str, agg, out: str,
+    salts: int | None = None,
+) -> DataFrame:
     """groupBy(key).agg(agg(val)) — the adjacency-roster aggregation
-    every iterative operator builds — with the optional hub split of
-    _roster_salts(). With S > 1 the output may hold several rows per
-    key, re-partitioned by ``key`` so per-round joins keep the
-    exchange-free discipline; callers that need one-row-per-key
-    semantics (initial node sets, degrees) handle S > 1 explicitly."""
-    s = _roster_salts()
+    every iterative operator builds — with the optional hub split into
+    `salts` rows per key (None: resolve _roster_salts() now). Each
+    operator resolves _roster_salts() once and passes the same value to
+    _roster, _roster_keys and _roster_sizes, so a roster and its readers
+    agree on the split even if the environment changes in between. With
+    S > 1 the output may hold several rows per key, re-partitioned by
+    ``key`` so per-round joins keep the exchange-free discipline;
+    callers that need one-row-per-key semantics (initial node sets,
+    degrees) handle S > 1 explicitly."""
+    s = _roster_salts() if salts is None else salts
     grouped = pairs.groupBy(key).agg(agg(val).alias(out))
     if s == 1:
         return grouped
@@ -84,21 +91,21 @@ def _roster(pairs: DataFrame, key: str, val: str, agg, out: str) -> DataFrame:
     )
 
 
-def _roster_keys(adj: DataFrame, key: str) -> DataFrame:
+def _roster_keys(adj: DataFrame, key: str, salts: int) -> DataFrame:
     """One row per roster key (the node universe of the keyed side) —
     a plain projection when rosters are one row per key, a distinct
     when the hub split may have produced several."""
     sel = adj.select(key)
-    return sel if _roster_salts() == 1 else sel.distinct()
+    return sel if salts == 1 else sel.distinct()
 
 
 def _roster_sizes(
-    adj: DataFrame, key: str, arr: str, key_out: str, out: str
+    adj: DataFrame, key: str, arr: str, key_out: str, out: str, salts: int
 ) -> DataFrame:
     """(key, total roster size) with exactly one row per key: size()
     per row by default, summed across rows under the hub split (salt
     groups partition the neighbor set, so the sum is the degree)."""
-    if _roster_salts() == 1:
+    if salts == 1:
         return adj.select(F.col(key).alias(key_out), F.size(arr).alias(out))
     return (
         adj.groupBy(key)
@@ -143,9 +150,10 @@ def pagerank(
     endpoints are not propagated as rank sinks; null-keyed edges never
     matched the contribution join anyway.)
     """
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        "__src", "__dst", F.collect_list, "__ds",
+        "__src", "__dst", F.collect_list, "__ds", salts,
     ).persist()
     nodes = (
         adj.select(F.col("__src").alias("node"))
@@ -170,7 +178,7 @@ def pagerank(
     # inner join and are now filtered explicitly.
     nd = (
         nodes.join(
-            _roster_sizes(adj, "__src", "__ds", "node", "__deg"),
+            _roster_sizes(adj, "__src", "__ds", "node", "__deg", salts),
             "node",
             "left",
         )
@@ -236,9 +244,10 @@ def pagerank_integer(
     == list roster over distinct edges, and contribution sums are
     order-exact integers); leave False to preserve edge multiplicity."""
     roster_agg = F.collect_set if dedup_edges else F.collect_list
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        "__src", "__dst", roster_agg, "__ds",
+        "__src", "__dst", roster_agg, "__ds", salts,
     ).persist()
     nodes = (
         adj.select(F.col("__src").alias("node"))
@@ -257,7 +266,7 @@ def pagerank_integer(
     # node fold per round; __r div __deg per source is unchanged
     nd = (
         nodes.join(
-            _roster_sizes(adj, "__src", "__ds", "node", "__deg"),
+            _roster_sizes(adj, "__src", "__ds", "node", "__deg", salts),
             "node",
             "left",
         )
@@ -680,16 +689,17 @@ def label_propagation(
 
     Returns (node, community).
     """
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
         .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us",
+        "v", "u", F.collect_set, "__us", salts,
     ).persist()
     adj.count()  # eager: build the roster once before the sweeps
-    labels = _roster_keys(adj, "v").select(
+    labels = _roster_keys(adj, "v", salts).select(
         F.col("v").alias("node")
     ).withColumn("lbl", F.col("node"))
     for _ in range(rounds):
@@ -742,16 +752,17 @@ def wl_colors(
 
     Returns (node, wl_color).
     """
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
         .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us",
+        "v", "u", F.collect_set, "__us", salts,
     ).persist()
     adj.count()  # eager: build the roster once before the rounds
-    colors = _roster_sizes(adj, "v", "__us", "node", "__d").select(
+    colors = _roster_sizes(adj, "v", "__us", "node", "__d", salts).select(
         "node", F.col("__d").cast("string").alias("color")
     )
     for _ in range(rounds):
@@ -822,13 +833,14 @@ def bfs_layers(
     synchronized superstep, the Pregel discipline; no per-node
     recursion, no driver state.
     """
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
         .filter(F.col("u") != F.col("v")),
-        "u", "v", F.collect_set, "__vs",
+        "u", "v", F.collect_set, "__vs", salts,
     ).persist()
     adj.count()  # eager: build the roster once before the levels
     frontier = seeds.select(F.col(node_col).alias("n")).distinct()
@@ -902,20 +914,21 @@ def hyperball(
     # persist keeps that partitioning visible, so each round's
     # roster-register join shuffles only the register state — and the
     # join input is one row per node instead of one per (edge, register).
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
         .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us",
+        "v", "u", F.collect_set, "__us", salts,
     ).persist()
     adj.count()  # eager: build the roster once before the rounds
     h = F.conv(
         F.substring(F.md5(F.col("node").cast("string")), 1, 15), 16, 10
     ).cast("long")
     regs = (
-        _roster_keys(adj, "v")
+        _roster_keys(adj, "v", salts)
         .select(F.col("v").alias("node"))
         .select(
             "node",
@@ -1000,9 +1013,10 @@ def personalized_pagerank_integer(
     personalization changes only the restart term. ``dedup_edges``:
     see pagerank_integer."""
     roster_agg = F.collect_set if dedup_edges else F.collect_list
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        "__src", "__dst", roster_agg, "__ds",
+        "__src", "__dst", roster_agg, "__ds", salts,
     ).persist()
     nodes = (
         adj.select(F.col("__src").alias("node"))
@@ -1018,7 +1032,7 @@ def personalized_pagerank_integer(
     # degree carried inside the iterated state (see pagerank)
     nd = (
         nodes.join(
-            _roster_sizes(adj, "__src", "__ds", "node", "__deg"),
+            _roster_sizes(adj, "__src", "__ds", "node", "__deg", salts),
             "node",
             "left",
         )
@@ -1086,20 +1100,21 @@ def hyperball_harmonic(
     numer = hll_alpha(m) * m * m * float(1 << 50)
     lcm = math.lcm(*range(1, rounds + 1))
     # Adjacency-roster form — see hyperball (optimization r12).
+    salts = _roster_salts()
     adj = _roster(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
         .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us",
+        "v", "u", F.collect_set, "__us", salts,
     ).persist()
     adj.count()  # eager: build the roster once before the rounds
     h = F.conv(
         F.substring(F.md5(F.col("node").cast("string")), 1, 15), 16, 10
     ).cast("long")
     regs = (
-        _roster_keys(adj, "v")
+        _roster_keys(adj, "v", salts)
         .select(F.col("v").alias("node"))
         .select(
             "node",

@@ -856,7 +856,7 @@ def _minhash_pairs_from(docs: DataFrame) -> DataFrame:
     return (
         pairs.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn("est_jaccard", F.round(D.minhash_jaccard_estimate(F.col("sig_a"), F.col("sig_b")), 6))
+        .withColumn("est_jaccard", F.round(D.minhash_jaccard_estimate("sig_a", "sig_b"), 6))
         .filter(F.col("est_jaccard") >= 0.5)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -8498,7 +8498,7 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = stage(docs, __toks=X.tokens(F.col("text")))
     sh = staged.select(
         "doc_id",
-        F.explode(X.shingles_from_tokens(F.col("__toks"), 3)).alias("sh"),
+        F.explode(X.shingles_from_tokens("__toks", 3)).alias("sh"),
     ).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
@@ -9675,7 +9675,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.explode(
-            X.shingles_from_tokens(F.col("__toks"), 3)
+            X.shingles_from_tokens("__toks", 3)
         ).alias("gram"),
     ).select(
         "doc_id", "source", F.md5("gram").alias("gh")

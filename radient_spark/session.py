@@ -22,6 +22,9 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
     - Arrow on: every Pandas-UDF boundary is columnar.
     - shuffle.partitions sized to the local core count (driver harness);
       a cluster deployment overrides via spark-submit conf.
+    - Partition discovery stays on the driver (no listing job when an
+      index or claim log is loaded); a deployment can lower the
+      threshold again through SPARK_GRAFT_EXTRA_CONF.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     builder = (
@@ -53,6 +56,17 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # List partitioned datasets on the driver. When one read names,
+        # or one directory holds, more paths than this threshold (Spark's
+        # default is 32), Spark lists them with a distributed job; in one
+        # local JVM that job only adds scheduling to a listing the driver
+        # does in milliseconds. This repo's partitioned layouts are IVF
+        # cell_id=/ dirs (64 by default, at most 2^16 when sized from
+        # sqrt(n)), one leaf_id=/ dir per forest leaf under each
+        # tree_id=/, and the claim log's 64 bucket=/ dirs plus at most
+        # compact_every deltas; 100000 is above all of them, so index
+        # loads and claim-log reads list without a job.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     )
     # Free-form conf passthrough for deployments and A/B measurement:
     # "k1=v1;k2=v2". Applied last, so it can override any default above.

@@ -26,8 +26,11 @@ semantics (stream over a static dir == batch over the same files).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from radient_spark.session import local_frame
 
@@ -1337,24 +1340,20 @@ def lsh_dedup_sink(
     join, both keyed on the batch's own bucket keys — AQE turns them
     into broadcast probes (two map-side scans of the state parquet)
     for normal batch sizes, and degrades to a sane shuffle only for
-    backfill-sized batches. Per-batch cost: two state scans + one
-    state write + batch-sized shuffles. The rewrite itself is the
-    min-fold's floor; at 100 TB, hash-partition the ownership table
-    and fold only touched partitions — orthogonal to this algebra.
+    backfill-sized batches. Per-batch cost: building the bucket frame
+    (operators/dedup.lsh_text_buckets) parses each lambda-bearing
+    expression from SQL text once, a few hundred py4j round trips in
+    all; the prior-owner probe reads every delta in one scan typed by
+    the batch's own claim schema, so no schema-inference job runs per
+    delta (base/ is its own bucket-pruned read); then one delta write
+    and batch-sized shuffles. The log is folded into base/ every
+    `compact_every` batches.
     """
-    from radient_spark.operators.dedup import lsh_buckets, with_minhash
+    from radient_spark.operators.dedup import lsh_text_buckets
 
     def bucket_fn(df: DataFrame) -> DataFrame:
-        sigs = with_minhash(
-            df.filter(F.length(F.trim(text_col)) > 0).select(id_col, text_col),
-            text_col=text_col,
-            num_hashes=num_hashes,
-            shingle_k=shingle_k,
-            out_col="__sig",
-        ).select(id_col, "__sig")
-        return lsh_buckets(
-            sigs, id_col=id_col, sig_col="__sig", bands=bands,
-            num_hashes=num_hashes,
+        return lsh_text_buckets(
+            df, id_col, text_col, num_hashes, shingle_k, bands
         )
 
     return _first_arrival_sink(
@@ -1521,25 +1520,38 @@ def _has_flat(spark, state_dir: str) -> bool:
 
 
 def _read_claims(
-    spark, parts: list[str], bucket_values: list[int] | None = None
+    spark,
+    parts: list[str],
+    bucket_values: list[int] | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Union of claim rows (band_idx, band_key, owner) across log parts.
 
-    The base/ is hive-partitioned by `bucket`; when bucket_values is
-    given (the probe path) the filter is a PARTITION filter — at 100 TB
-    the probe reads only the batch's buckets of base instead of scanning
-    all accumulated state. Deltas are O(compact_every recent batches),
-    small by construction, and read in full. A legacy unbucketed base
+    All delta-*/ parts are read in ONE scan. Given their `schema` (the
+    batch path passes its batch_owner schema, which is exactly what each
+    delta holds) the scan infers nothing, so building the frame runs no
+    job; without it (the fold, compaction and migration readers) one
+    inferred read replaces one schema-inference job per delta. Deltas
+    are O(compact_every recent batches), small by construction, and
+    read in full.
+
+    The base/ is a separate read, hive-partitioned by `bucket`; when
+    bucket_values is given (the probe path) the filter is a PARTITION
+    filter — at 100 TB the probe reads only the batch's buckets of base
+    instead of scanning all accumulated state. A legacy unbucketed base
     (no bucket column) degrades to a full read — still correct — and
     converges to the bucketed layout at the next compaction."""
-    from functools import reduce
-
+    cols = ["band_idx", "band_key", "owner"]
+    deltas = [p for p in parts if not p.endswith("/base")]
     dfs = []
-    for p in parts:
-        df = spark.read.parquet(p)
+    for base in (p for p in parts if p.endswith("/base")):
+        df = spark.read.parquet(base)
         if bucket_values is not None and "bucket" in df.columns:
             df = df.filter(F.col("bucket").isin(bucket_values))
-        dfs.append(df.select("band_idx", "band_key", "owner"))
+        dfs.append(df.select(*cols))
+    if deltas:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        dfs.append(reader.parquet(*deltas).select(*cols))
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
@@ -1650,7 +1662,9 @@ def _probe_prior_claims(
                 _bucket_expr(n_buckets).alias("b")
             ).distinct().collect()
         ]
-    prev = _read_claims(spark, parts, bucket_values=bucket_vals)
+    prev = _read_claims(
+        spark, parts, bucket_values=bucket_vals, schema=batch_owner.schema
+    )
     return prev.join(
         F.broadcast(batch_owner.select(*keys)), keys, "left_semi"
     )

@@ -639,3 +639,59 @@ def test_list_search_plan_is_local_and_pruned(spark, emb, tmp_path, monkeypatch,
     empty = idx.search([], k=5, **kw)
     assert empty.schema.simpleString() == "struct<qid:bigint,id:bigint,score:double>"
     assert empty.count() == 0
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+def test_rerank_score_bit_equal_to_vector_builders(spark, metric):
+    """The rerank score is parsed from constant SQL text; it must be the
+    same expression as the functions/vector builders, bit for bit,
+    including a zero vector. Under ANSI mode (Spark 4's default) a
+    cosine over a zero vector is a division by zero, and both forms
+    raise it alike."""
+    import math
+    import struct
+
+    from pyspark.sql import Window
+
+    from radient_spark.ann import _RERANK_SCORE_SQL, _rerank_topk
+    from radient_spark.functions import vector as V
+
+    rng = np.random.default_rng(11)
+    vecs = [rng.normal(size=6).tolist() for _ in range(6)] + [[0.0] * 6]
+    qvecs = [rng.normal(size=6).tolist(), [0.0] * 6]
+    cand = spark.createDataFrame(
+        [(q, i, v, qv) for q, qv in enumerate(qvecs) for i, v in enumerate(vecs)],
+        "qid bigint, id bigint, vector array<float>, qvec array<float>",
+    )
+    ref = {
+        "cosine": V.cosine_similarity("vector", "qvec"),
+        "dot": V.dot("vector", "qvec"),
+        "l2": -V.l2_distance("vector", "qvec"),
+    }[metric]
+    if metric == "cosine":
+        zero = cand.filter("NOT (exists(vector, x -> x != 0) AND exists(qvec, x -> x != 0))")
+        for score in (F.expr(_RERANK_SCORE_SQL[metric]), ref):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                zero.select(score).collect()
+        cand = cand.filter("exists(vector, x -> x != 0) AND exists(qvec, x -> x != 0)")
+    rows = cand.select(
+        "qid", "id", F.expr(_RERANK_SCORE_SQL[metric]).alias("got"), ref.alias("want")
+    ).collect()
+
+    def bits(x):
+        return "nan" if math.isnan(x) else struct.pack("<d", x)
+
+    assert [bits(r["got"]) for r in rows] == [bits(r["want"]) for r in rows]
+
+    top = _rerank_topk(cand, 3, metric)
+    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id").asc())
+    want = (
+        cand.withColumn("score", F.round(ref, 6))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter("__rn <= 3")
+        .select("qid", "id", "score")
+    )
+    assert top.schema == want.schema
+    got_rows = sorted((r["qid"], r["id"], bits(r["score"])) for r in top.collect())
+    want_rows = sorted((r["qid"], r["id"], bits(r["score"])) for r in want.collect())
+    assert got_rows == want_rows

@@ -37,6 +37,71 @@ def test_lsh_pairs_empty(spark):
     assert D.lsh_pairs_from_signatures(sigs, sig_col="sig", bands=4).count() == 0
 
 
+_EDGE_DOCS = [
+    (1, ""),
+    (2, "   "),
+    (3, "solo"),
+    (4, "two words"),
+    (5, "  runs   of\t\twhite \n space   here  "),
+    (6, "café naïve 東京 タワー 🙂 ñandú"),
+    (7, "a b c d e f g"),
+    (8, "a b c d e f g"),
+]
+
+
+def test_minhash_and_buckets_match_duckdb_oracle_on_edge_docs(spark):
+    """The one-parse MinHash and band-key expressions against the DuckDB
+    oracle's shape (queries._minhash_sql): empty and blank documents,
+    fewer than k tokens, runs of whitespace and non-ASCII text."""
+    import duckdb
+    import pyarrow as pa
+
+    from radient_spark.queries import _minhash_sql
+
+    con = duckdb.connect()
+    con.register("documents", pa.table({
+        "doc_id": [d for d, _ in _EDGE_DOCS], "text": [t for _, t in _EDGE_DOCS],
+    }))
+    want = dict(con.sql(_minhash_sql(8)).fetchall())
+    assert set(want) == {3, 4, 5, 6, 7, 8}  # the oracle drops blank docs
+
+    df = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    sigs = D.with_minhash(df, num_hashes=8, out_col="sig")
+    assert sigs.schema["sig"].dataType.simpleString() == "array<bigint>"
+    got = {r["doc_id"]: r["sig"] for r in sigs.collect()}
+    assert got[1] == got[2] == [D.MINHASH_P] * 8
+    assert {d: "_".join(map(str, s)) for d, s in got.items() if d in want} == want
+
+    nonblank = sigs.filter(F.col("doc_id") > 2)
+    buckets = D.lsh_buckets(nonblank, sig_col="sig", bands=4, num_hashes=8)
+    assert buckets.schema.simpleString() == (
+        "struct<doc_id:bigint,band_idx:int,band_key:string>"
+    )
+    assert sorted(tuple(r) for r in buckets.collect()) == sorted(
+        (d, i, "_".join(s.split("_")[2 * i:2 * i + 2]))
+        for d, s in want.items() for i in range(4)
+    )
+
+
+def test_lsh_builders_quote_signature_column_names(spark):
+    """A sig_col holding a space and a backtick is quoted into the parsed
+    band-key text and names the same column."""
+    df = spark.createDataFrame(_EDGE_DOCS[2:], "doc_id long, text string")
+    sigs = D.with_minhash(df, num_hashes=8, out_col="sig")
+    odd = "my `sig` col"
+    renamed = sigs.withColumnRenamed("sig", odd)
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    assert rows(D.lsh_buckets(renamed, sig_col=odd, bands=4)) == rows(
+        D.lsh_buckets(sigs, sig_col="sig", bands=4)
+    )
+    pairs = rows(D.lsh_pairs_from_signatures(renamed, sig_col=odd, bands=4))
+    assert pairs == rows(D.lsh_pairs_from_signatures(sigs, sig_col="sig", bands=4))
+    assert (7, 8) in pairs
+
+
 def test_topk_k_exceeds_rows(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "id long, vec array<float>"

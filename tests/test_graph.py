@@ -541,3 +541,43 @@ def test_roster_salt_split_results_identical(spark, monkeypatch):
     assert salted_pr.keys() == base_pr.keys()
     for n, v in base_pr.items():
         assert abs(salted_pr[n] - v) < 1e-12
+
+
+def test_roster_salts_resolved_once_per_operator_call(spark, monkeypatch):
+    """An operator reads SPARK_GRAFT_ROSTER_SALTS once and hands the
+    value to every roster helper: changing the variable after the roster
+    is built (here, right after _roster returns, before the degree and
+    node-set frames are built and evaluated) must not let those frames
+    assume a different split than the roster has."""
+    import os
+
+    from radient_spark.operators import graph as G
+
+    edge_rows = [(0, i) for i in range(1, 41)] + [
+        (i, i % 12 + 1) for i in range(1, 13)
+    ]
+    edges = spark.createDataFrame(edge_rows, "src long, dst long")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    ops = {
+        "pr_int": lambda: rows(G.pagerank_integer(edges, iters=2)),
+        "lpa": lambda: rows(G.label_propagation(edges, rounds=2)),
+        "wl": lambda: rows(G.wl_colors(edges, rounds=2)),
+        "hb": lambda: rows(G.hyperball(edges, rounds=2)),
+    }
+    monkeypatch.delenv("SPARK_GRAFT_ROSTER_SALTS", raising=False)
+    base = {name: op() for name, op in ops.items()}
+
+    real = G._roster
+
+    def roster_then_flip(*args, **kwargs):
+        out = real(*args, **kwargs)
+        os.environ["SPARK_GRAFT_ROSTER_SALTS"] = "1"
+        return out
+
+    monkeypatch.setattr(G, "_roster", roster_then_flip)
+    for name, op in ops.items():
+        monkeypatch.setenv("SPARK_GRAFT_ROSTER_SALTS", "4")
+        assert op() == base[name], name

@@ -43,3 +43,35 @@ def test_reliable_checkpoint_results_identical(spark, tmp_path, monkeypatch):
     # reliable checkpoint files actually landed on stable storage
     files = [p for p in ckpt.rglob("*") if p.is_file()]
     assert files, "expected checkpoint files under SPARK_GRAFT_CHECKPOINT_DIR"
+
+
+def test_truncate_warns_when_checkpoint_dir_changes(spark, tmp_path, monkeypatch):
+    """Spark keeps one checkpoint dir per context, so truncate cannot
+    follow a changed SPARK_GRAFT_CHECKPOINT_DIR; it says so instead of
+    silently writing to the first dir."""
+    import warnings
+
+    import pytest
+
+    sc = spark.sparkContext
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "first"))
+    with warnings.catch_warnings():
+        # an earlier test may already have set this context's dir
+        warnings.simplefilter("ignore")
+        truncate(spark.range(3), eager=True)
+    in_use = sc.getCheckpointDir()
+    assert in_use is not None
+
+    # the dir in use, however spelled, does not warn
+    parent = in_use.rsplit("/", 1)[0].removeprefix("file:")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", parent + "/")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert _rows(truncate(spark.range(3), eager=True)) == [(0,), (1,), (2,)]
+
+    other = str(tmp_path / "second")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", other)
+    with pytest.warns(RuntimeWarning, match="second"):
+        out = truncate(spark.range(3), eager=True)
+    assert _rows(out) == [(0,), (1,), (2,)]
+    assert sc.getCheckpointDir() == in_use
