@@ -657,9 +657,15 @@ def _plan_sha(df) -> str | None:
     fake) plan regressions; this hash makes them detectable
     independently of timing: a join flipping SMJ<->broadcast, a lost
     PushedFilters, a vanished WholeStageCodegen span all flip the sha.
-    Volatile tokens (expression ids, plan ids — renumbered per session)
-    are normalized out so the sha is stable across runs of an unchanged
-    plan.
+    Volatile tokens are normalized out so the sha is stable across runs
+    of an unchanged plan: expression ids and plan ids (renumbered per
+    session), the `x_<n>`/`y_<n>`/`z_<n>` names of lambda-API variables
+    (numbered by a counter shared by the whole session) and RDD ids in
+    scan arguments.  Not normalized: the order in which
+    RewriteDistinctAggregates lists the distinct groups of a query with
+    two or more distinct aggregates, which follows expression ids, so
+    such a plan's sha can still move with what the session built
+    before it.
     """
     import hashlib
     import re as _re
@@ -672,6 +678,8 @@ def _plan_sha(df) -> str | None:
     except Exception:
         return None
     txt = _re.sub(r"#\d+", "#", txt)
+    txt = _re.sub(r"lambda ([xyz])_\d+#", r"lambda \1_#", txt)
+    txt = _re.sub(r"RDD\[\d+\]", "RDD[]", txt)
     txt = _re.sub(r"plan_id=\d+", "plan_id=", txt)
     txt = _re.sub(r"\[id=#?\d*\]", "", txt)
     txt = _re.sub(r"cachedrdd-\d+", "cachedrdd-", txt)

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from radient_spark.functions.vector import lit_long_matrix, lit_longs
+from radient_spark.functions.vector import lit_long_matrix
 from radient_spark.operators.dedup import str_hash
 
 MICRO = 1_000_000
@@ -55,15 +55,6 @@ def micro_vec(vec) -> F.Column:
         vec,
         lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
         + F.lit(MICRO_SHIFT),
-    )
-
-
-def _lattice_distance(micro_col: F.Column, centroid: list[int]) -> F.Column:
-    carr = lit_longs(centroid)
-    return F.aggregate(
-        F.zip_with(micro_col, carr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, z: acc + z,
     )
 
 

@@ -47,6 +47,24 @@ def grouped_exact_quantiles(
     return df.groupBy(*keys).applyInPandas(agg, out_schema)
 
 
+def _window_hashes(text: str, k: int, base: int, mod: int):
+    """Karp-Rabin hashes of every k-char window of `text` (one window
+    if the text is shorter than k): k elementwise numpy passes over the
+    utf-32 code points, in exact int64 mod arithmetic — the same
+    integers as the scalar fold functions/text.rolling_hash_fingerprint."""
+    import numpy as np
+
+    codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(
+        np.int64
+    )
+    kk = min(k, len(codes))
+    n_win = len(codes) - kk + 1
+    acc = np.zeros(n_win, dtype=np.int64)
+    for j in range(kk):
+        acc = (acc * base + codes[j : j + n_win]) % mod
+    return acc
+
+
 def rolling_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -55,16 +73,13 @@ def rolling_fingerprints(
     base: int = 31,
     mod: int = 1_000_003,
 ) -> DataFrame:
-    """Karp-Rabin rolling-hash fingerprint, vectorized: for each doc the
-    k-char window hashes are computed with k elementwise numpy passes
-    over the utf-32 code-point array (exact int64 mod arithmetic —
-    identical to the scalar fold), fingerprint = min window hash.
+    """Karp-Rabin rolling-hash fingerprint, vectorized: fingerprint =
+    the minimum of the doc's k-char window hashes (_window_hashes).
 
     Same integers as functions/text.rolling_hash_fingerprint (the pure
     Catalyst version), ~20x faster per row: the HOF fold interprets
     O(n*k) lambda steps, this runs O(k) numpy vector ops.
     """
-    import numpy as np
     import pandas as pd
 
     id_type = dict(df.dtypes)[id_col]
@@ -76,16 +91,8 @@ def rolling_fingerprints(
             for rid, text in zip(pdf[id_col], pdf[text_col]):
                 if not text:
                     continue
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                kk = min(k, len(codes))
-                n_win = len(codes) - kk + 1
-                acc = np.zeros(n_win, dtype=np.int64)
-                for j in range(kk):
-                    acc = (acc * base + codes[j : j + n_win]) % mod
                 ids.append(rid)
-                fps.append(int(acc.min()))
+                fps.append(int(_window_hashes(text, k, base, mod).min()))
             yield pd.DataFrame({id_col: ids, "fp": fps})
 
     return df.select(id_col, text_col).mapInPandas(gen, out_schema)
@@ -133,10 +140,9 @@ def winnowing_fingerprints(
     unlike the whole-doc minimum (rolling_fingerprints), matches
     anywhere in a long document are caught.
 
-    Same exact int64 mod arithmetic as rolling_fingerprints (numpy
-    vectorized, O(k + w) vector passes per doc); emits one row per
-    selected fingerprint: (id, pos, fp) with pos the 0-based window
-    start. Texts shorter than k hash as one window; hash streams
+    Same window hashes as rolling_fingerprints (_window_hashes, then
+    O(w) vector passes per doc); emits one row per selected
+    fingerprint: (id, pos, fp) with pos the 0-based window start. Texts shorter than k hash as one window; hash streams
     shorter than w select their global minimum once.
     """
     import numpy as np
@@ -151,15 +157,8 @@ def winnowing_fingerprints(
             for rid, text in zip(pdf[id_col], pdf[text_col]):
                 if not text:
                     continue
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                kk = min(k, len(codes))
-                n_win = len(codes) - kk + 1
-                acc = np.zeros(n_win, dtype=np.int64)
-                for j in range(kk):
-                    acc = (acc * base + codes[j : j + n_win]) % mod
-                ww = min(w, n_win)
+                acc = _window_hashes(text, k, base, mod)
+                ww = min(w, len(acc))
                 sw = np.lib.stride_tricks.sliding_window_view(acc, ww)
                 # rightmost argmin: argmin over the reversed window
                 arg = ww - 1 - sw[:, ::-1].argmin(axis=1)

@@ -80,13 +80,6 @@ def sparse_to_array(col):
     return vector_to_array(col)
 
 
-def array_to_dense_vector(col):
-    """array<numeric> column -> DenseVector (Catalyst expr)."""
-    from pyspark.ml.functions import array_to_vector
-
-    return array_to_vector(col)
-
-
 def array_to_sparse_vector(col):
     """array<numeric> column -> SparseVector, dropping zeros.
 

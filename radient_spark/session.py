@@ -15,6 +15,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
+def _driver_mem_for(phys_bytes: int) -> str:
+    """Default driver heap: half of physical RAM, capped at 48g.  In
+    local mode the driver JVM is the whole engine, and a heap sized
+    above the host's RAM lets the JVM grow until the kernel's OOM
+    killer ends it."""
+    return f"{min(phys_bytes // 2, 48 << 30) >> 20}m"
+
+
 def get_session(app_name: str = "radient_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with scale-oriented defaults.
 
@@ -25,6 +33,8 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
     - Partition discovery stays on the driver (no listing job when an
       index or claim log is loaded); a deployment can lower the
       threshold again through SPARK_GRAFT_EXTRA_CONF.
+    - Driver heap: SPARK_GRAFT_DRIVER_MEM, else half of physical RAM
+      capped at 48g (_driver_mem_for).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     builder = (
@@ -54,7 +64,13 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _driver_mem_for(
+                os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+            ),
+        )
         .config("spark.ui.enabled", "false")
         # List partitioned datasets on the driver. When one read names,
         # or one directory holds, more paths than this threshold (Spark's

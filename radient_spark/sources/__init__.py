@@ -32,10 +32,6 @@ def local_source(
     )
 
 
-def text_source(spark: SparkSession, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).text(path)
-
-
 def ingest(df: DataFrame, target_dir: str, mode: str = "append") -> None:
     """COPY-INTO-style managed ingest (≡ IngestSource): append the batch to
     a managed parquet location; readers see a consistent snapshot."""

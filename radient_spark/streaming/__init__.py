@@ -257,11 +257,14 @@ def _state_fs(spark, d: str):
 
 def _recover_state(spark, state_dir: str) -> None:
     """Roll forward a commit interrupted between renames: if state_dir
-    is missing but a fully-written staging dir (_SUCCESS present)
-    exists, rename it into place.  Called before every state read."""
+    is missing but a committed staging dir exists, rename it into place.
+    Called before every state read.  Committed means the epoch marker
+    is present, not just the job's _SUCCESS: a first commit that dies
+    before its marker has no old state to fall back to, and rolling it
+    forward would make the replayed batch merge into itself."""
     P, fs = _state_fs(spark, state_dir)
-    if not fs.exists(P(state_dir)) and fs.exists(
-        P(state_dir + ".staging/_SUCCESS")
+    if not fs.exists(P(state_dir)) and fs.globStatus(
+        P(state_dir + ".staging/_EPOCH-*")
     ):
         fs.rename(P(state_dir + ".staging"), P(state_dir))
 
@@ -308,14 +311,7 @@ def _commit_state(
     against nothing — silently dropping all accumulated history.  Here
     the new state is written to a staging dir first (old state intact
     throughout), an `_EPOCH-<tag>-<n>` marker is stamped inside it, and
-    the swap is two renames.  Crash windows:
-
-    - during the staging write: old state untouched; replay re-merges.
-    - between the renames: state_dir briefly absent, but the committed
-      staging dir is rolled forward by _recover_state on the next read.
-    - after the swap, before the checkpoint commit: the epoch marker
-      makes the replayed batch a no-op (_epoch_committed), so
-      non-idempotent merges (SUM/SCD2/fingerprint) never double-count.
+    the swap is two renames.  _state_sink lists the crash windows.
     """
     spark = df.sparkSession
     staging = state_dir + ".staging"
@@ -331,6 +327,54 @@ def _commit_state(
         fs.rename(P(state_dir), P(trash))
     fs.rename(P(staging), P(state_dir))
     fs.delete(P(trash), True)
+
+
+def _state_sink(stream: DataFrame, state_dir: str, checkpoint: str, step):
+    """The read-merge-commit cycle of the state sinks below: per
+    micro-batch, `step(batch_df, prior)` returns the new state from the
+    batch and the committed state (`prior`, None before the first
+    commit), and _commit_state swaps it in.  Crash windows:
+
+    - during the staging write, or before its epoch marker is stamped:
+      the old state is untouched, and the replayed batch re-merges
+      against it.
+    - between the two renames: state_dir is briefly absent, and
+      _recover_state rolls the committed staging dir (its epoch marker
+      present) forward on the next read.
+    - after the swap, before the streaming checkpoint commits: the
+      epoch marker makes the replayed batch a no-op (_epoch_committed),
+      so merges that are not idempotent (SUM, SCD2, fingerprint) never
+      count a batch twice.
+
+    tests/test_streaming.py::test_state_sink_crash_windows injects each
+    window into every sink built on this helper.
+    """
+    tag = _epoch_tag(checkpoint)
+
+    def batch_fn(df: DataFrame, epoch_id: int) -> None:
+        spark = df.sparkSession
+        if _epoch_committed(spark, state_dir, tag, epoch_id):
+            return
+        prior = (
+            spark.read.parquet(state_dir)
+            if _state_exists(spark, state_dir)
+            else None
+        )
+        _commit_state(step(df, prior), state_dir, tag, epoch_id)
+
+    return foreach_batch_sink(stream, checkpoint, batch_fn)
+
+
+def _sum_merge(prior, fresh: DataFrame, keys: list[str], sums: list[str]):
+    """Key-wise SUM of the `sums` columns over prior state and a batch's
+    partials (the distributive-aggregate merge law)."""
+    if prior is None:
+        return fresh
+    return (
+        prior.unionByName(fresh)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in sums])
+    )
 
 
 def incremental_ingest_sink(
@@ -358,10 +402,8 @@ def incremental_ingest_sink(
     Genuine analysis errors propagate and fail the batch."""
 
     def _corpus_has_data(spark) -> bool:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(corpus_dir)
-        fs = path.getFileSystem(hconf)
+        P, fs = _state_fs(spark, corpus_dir)
+        path = P(corpus_dir)
         if not fs.exists(path):
             return False
         it = fs.listFiles(path, True)
@@ -433,33 +475,24 @@ def sketch_maintenance_sink(
     merged table IS the batch sketch format, so `hll_estimate` reads it
     directly at any time.
 
-    The register overwrite rides _commit_state (staging + rename swap +
-    epoch marker): max-merge is idempotent, but a bare overwrite could
-    still lose ALL registers to a mid-write crash.
+    The register overwrite rides _state_sink: max-merge is idempotent,
+    but a bare overwrite could still lose ALL registers to a mid-write
+    crash.
     """
     from radient_spark.operators.sketch import hll_registers
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, sketch_dir, tag, epoch_id):
-            return
-        fresh = hll_registers(df, F.col(key_col).cast("string"), p)
-        if _state_exists(spark, sketch_dir):
-            old = spark.read.parquet(sketch_dir)
+    def step(df: DataFrame, prior) -> DataFrame:
+        merged = hll_registers(df, F.col(key_col).cast("string"), p)
+        if prior is not None:
             merged = (
-                old.unionByName(fresh)
+                prior.unionByName(merged)
                 .groupBy("idx")
                 .agg(F.max("rho_max").alias("rho_max"))
             )
-        else:
-            merged = fresh
-        # staging write never clobbers the read side; registers are
-        # tiny (<= 2^p rows) so coalesce(1) keeps the state a single file
-        _commit_state(merged.coalesce(1), sketch_dir, tag, epoch_id)
+        # registers are tiny (<= 2^p rows): keep the state one file
+        return merged.coalesce(1)
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, sketch_dir, checkpoint, step)
 
 
 def bloom_ingest_sink(
@@ -486,15 +519,10 @@ def bloom_ingest_sink(
     """
     from radient_spark.operators.dedup import bloom_build, bloom_gate
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
+    def step(df: DataFrame, bitmap) -> DataFrame:
         spark = df.sparkSession
-        if _epoch_committed(spark, bloom_dir, tag, epoch_id):
-            return  # bitmap committed => corpus append also ran
         batch = df.dropDuplicates([text_col])
-        if _state_exists(spark, bloom_dir):
-            bitmap = spark.read.parquet(bloom_dir)
+        if bitmap is not None:
             gated = bloom_gate(batch, bitmap, text_col, m_bits, k)
             new = gated.filter(~F.col("maybe_dup")).drop("maybe_dup")
             maybe = gated.filter(F.col("maybe_dup")).drop("maybe_dup")
@@ -515,25 +543,24 @@ def bloom_ingest_sink(
         else:
             fresh = batch
         # materialize before the writes: both the corpus append and the
-        # bitmap merge consume `fresh`, and the bitmap overwrite below
-        # must not observe a half-updated corpus read
+        # bitmap merge consume `fresh`, and the bitmap overwrite must
+        # not observe a half-updated corpus read
         fresh = fresh.localCheckpoint(eager=True)
+        # the append lands before the bitmap commit, so the epoch marker
+        # also makes replay after a committed swap skip the append.  Not
+        # covered: a commit that fails after the append, whose retry
+        # appends again the rows the old bitmap calls new.
         fresh.write.mode("append").parquet(corpus_dir)
-        add = bloom_build(fresh.select(text_col), text_col, m_bits, k)
-        if _state_exists(spark, bloom_dir):
+        merged = bloom_build(fresh.select(text_col), text_col, m_bits, k)
+        if bitmap is not None:
             merged = (
-                spark.read.parquet(bloom_dir)
-                .unionByName(add)
+                bitmap.unionByName(merged)
                 .groupBy("word")
                 .agg(F.bit_or("bits").alias("bits"))
             )
-        else:
-            merged = add
-        # crash-safe swap; the epoch marker also makes replay after a
-        # committed swap a no-op (so the corpus is not re-appended)
-        _commit_state(merged.coalesce(1), bloom_dir, tag, epoch_id)
+        return merged.coalesce(1)
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, bloom_dir, checkpoint, step)
 
 
 def cms_maintenance_sink(
@@ -550,26 +577,16 @@ def cms_maintenance_sink(
     heavy-hitter monitor, state bounded at d*w rows forever.
 
     Unlike the HLL sink's max-merge, SUM is NOT idempotent, so
-    exactly-once matters: _commit_state's epoch marker makes a replayed
-    already-committed batch a no-op, and the staging+rename swap means
-    a crash mid-write never leaves the cell table empty.
+    exactly-once matters: _state_sink's epoch marker makes a replayed
+    already-committed batch a no-op.
     """
     from radient_spark.operators.sketch import cms_build, cms_merge
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, sketch_dir, tag, epoch_id):
-            return
+    def step(df: DataFrame, prior) -> DataFrame:
         fresh = cms_build(df, token_col, depth, width)
-        if _state_exists(spark, sketch_dir):
-            merged = cms_merge(spark.read.parquet(sketch_dir), fresh)
-        else:
-            merged = fresh
-        _commit_state(merged.coalesce(1), sketch_dir, tag, epoch_id)
+        return (fresh if prior is None else cms_merge(prior, fresh)).coalesce(1)
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, sketch_dir, checkpoint, step)
 
 
 def hist_maintenance_sink(
@@ -586,26 +603,16 @@ def hist_maintenance_sink(
     few thousand bucket rows forever. `hist_quantiles` reads the
     merged table directly at any time for any quantile.
 
-    Like the CMS sink (SUM is not idempotent), _commit_state's epoch
-    marker + staging swap give crash-safe exactly-once for the tiny
-    bucket table.
+    Like the CMS sink (SUM is not idempotent), it commits through
+    _state_sink for crash-safe exactly-once.
     """
     from radient_spark.operators.sketch import hist_build, hist_merge
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, sketch_dir, tag, epoch_id):
-            return
+    def step(df: DataFrame, prior) -> DataFrame:
         fresh = hist_build(df, F.col(value_col), sub_bits=sub_bits)
-        if _state_exists(spark, sketch_dir):
-            merged = hist_merge(spark.read.parquet(sketch_dir), fresh)
-        else:
-            merged = fresh
-        _commit_state(merged.coalesce(1), sketch_dir, tag, epoch_id)
+        return (fresh if prior is None else hist_merge(prior, fresh)).coalesce(1)
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, sketch_dir, checkpoint, step)
 
 
 def agg_maintenance_sink(
@@ -624,43 +631,21 @@ def agg_maintenance_sink(
     everything ingested (avg = total/cnt at read time — any
     algebraic aggregate over distributive partials works this way).
 
-    Like the CMS/histogram sinks, sum-merge is not idempotent, so
-    _commit_state's epoch marker + staging swap give crash-safe
-    exactly-once for the read-merge-commit cycle.
+    Like the CMS/histogram sinks, sum-merge is not idempotent, so the
+    cycle rides _state_sink for crash-safe exactly-once.  State stays
+    distributed — no O(distinct keys) driver materialization — and the
+    staging write never overwrites the state files feeding the union,
+    so no lineage-severing localCheckpoint is needed.
     """
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, state_dir, tag, epoch_id):
-            return
+    def step(df: DataFrame, prior) -> DataFrame:
         fresh = df.groupBy(F.col(key_col).alias("k")).agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.col(value_col)).alias("total"),
         )
-        if _state_exists(spark, state_dir):
-            merged = (
-                spark.read.parquet(state_dir)
-                .unionByName(fresh)
-                .groupBy("k")
-                .agg(
-                    F.sum("cnt").alias("cnt"),
-                    F.sum("total").alias("total"),
-                )
-            )
-        else:
-            merged = fresh
-        # State stays distributed — no O(distinct keys) driver
-        # materialization (a collect() here was the round-4 scale
-        # cliff).  _commit_state writes the merged plan to a staging
-        # dir, so the old state files feeding the union are never
-        # overwritten mid-read — no lineage-severing localCheckpoint
-        # needed either (the round-5 eager checkpoint existed only to
-        # guard the in-place overwrite this replaced).
-        _commit_state(merged, state_dir, tag, epoch_id)
+        return _sum_merge(prior, fresh, ["k"], ["cnt", "total"])
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, state_dir, checkpoint, step)
 
 
 def cc_maintenance_sink(
@@ -683,34 +668,20 @@ def cc_maintenance_sink(
 
     The label overwrite is idempotent given the checkpoint's per-batch
     boundary: replaying a batch re-unions edges whose connectivity is
-    already folded into the star summary.
+    already folded into the star summary.  Labels stay distributed (a
+    10^9-node label table never rides the driver).
     """
     from radient_spark.operators.graph import connected_components_star
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, labels_dir, tag, epoch_id):
-            return
-        new_edges = df.select(
-            F.col(id_a).alias("id_a"), F.col(id_b).alias("id_b")
-        )
-        if _state_exists(spark, labels_dir):
-            prior = spark.read.parquet(labels_dir).select(
+    def step(df: DataFrame, prior) -> DataFrame:
+        edges = df.select(F.col(id_a).alias("id_a"), F.col(id_b).alias("id_b"))
+        if prior is not None:
+            edges = prior.select(
                 F.col("group_id").alias("id_a"), F.col("id").alias("id_b")
-            )
-            edges = prior.unionByName(new_edges)
-        else:
-            edges = new_edges
-        labels = connected_components_star(edges)
-        # Labels stay distributed (a 10^9-node label table never rides
-        # the driver); _commit_state's staging write means the prior
-        # labels feeding the union are never overwritten mid-read, and
-        # the swap is crash-safe.
-        _commit_state(labels, labels_dir, tag, epoch_id)
+            ).unionByName(edges)
+        return connected_components_star(edges)
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, labels_dir, checkpoint, step)
 
 
 def stateful_sessions(
@@ -826,32 +797,17 @@ def hourly_count_sink(
 
     State is one row per (key, hour) — bounded by keys x elapsed
     hours, merged DISTRIBUTED (no driver materialization).  Sum-merge
-    is not idempotent, so _commit_state's epoch marker + staging swap
-    give crash-safe exactly-once, like the CMS/agg sinks.
+    is not idempotent, so it rides _state_sink, like the CMS/agg sinks.
     """
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, state_dir, tag, epoch_id):
-            return
+    def step(df: DataFrame, prior) -> DataFrame:
         fresh = df.groupBy(
             F.col(key_col),
             F.date_trunc("hour", F.col(ts_col)).alias("hour_ts"),
         ).agg(F.count(F.lit(1)).alias("n_events"))
-        if _state_exists(spark, state_dir):
-            merged = (
-                spark.read.parquet(state_dir)
-                .unionByName(fresh)
-                .groupBy(key_col, "hour_ts")
-                .agg(F.sum("n_events").alias("n_events"))
-            )
-        else:
-            merged = fresh
-        _commit_state(merged, state_dir, tag, epoch_id)
+        return _sum_merge(prior, fresh, [key_col, "hour_ts"], ["n_events"])
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, state_dir, checkpoint, step)
 
 
 def scd2_maintenance_sink(
@@ -873,26 +829,17 @@ def scd2_maintenance_sink(
     writer of the warehouse dimension table.
 
     State is the history itself (one row per key-version), merged
-    DISTRIBUTED.  The merge is not idempotent (n_rows sums), so
-    _commit_state's epoch marker + staging swap give crash-safe
-    exactly-once for the read-merge-commit cycle.
+    DISTRIBUTED.  The merge is not idempotent (n_rows sums), so the
+    cycle rides _state_sink for crash-safe exactly-once.
     """
     from radient_spark.operators.merge import scd2_history, scd2_merge
 
-    tag = _epoch_tag(checkpoint)
+    def step(df: DataFrame, history) -> DataFrame:
+        if history is None:
+            return scd2_history(df, key, attr, order_col, tiebreak_col)
+        return scd2_merge(history, df, key, attr, order_col, tiebreak_col)
 
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, history_dir, tag, epoch_id):
-            return
-        if _state_exists(spark, history_dir):
-            history = spark.read.parquet(history_dir)
-            merged = scd2_merge(history, df, key, attr, order_col, tiebreak_col)
-        else:
-            merged = scd2_history(df, key, attr, order_col, tiebreak_col)
-        _commit_state(merged, history_dir, tag, epoch_id)
-
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, history_dir, checkpoint, step)
 
 
 def join_view_sink(
@@ -932,30 +879,26 @@ def sample_maintenance_sink(
     reservoir, with none of a reservoir's order dependence.
 
     Per batch: key the batch, union with state, keep the k smallest
-    (TakeOrderedAndProject), commit via the staging swap.  Replays are
+    (TakeOrderedAndProject), commit via _state_sink.  Replays are
     idempotent (ranks are stateless functions of ids), but the
     crash-safe commit still matters: a bare overwrite could lose the
     whole reservoir to a mid-write failure."""
     from radient_spark.operators.dedup import str_hash
 
-    tag = _epoch_tag(checkpoint)
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, state_dir, tag, epoch_id):
-            return
+    def step(df: DataFrame, prior) -> DataFrame:
         keyed = df.withColumn(
             "sample_rank",
             str_hash(F.concat_ws("_", F.lit(seed), F.col(id_col))),
         )
-        if _state_exists(spark, state_dir):
-            keyed = spark.read.parquet(state_dir).unionByName(keyed)
-        merged = keyed.orderBy(
-            F.col("sample_rank").asc(), F.col(id_col).asc()
-        ).limit(k)
-        _commit_state(merged.coalesce(1), state_dir, tag, epoch_id)
+        if prior is not None:
+            keyed = prior.unionByName(keyed)
+        return (
+            keyed.orderBy(F.col("sample_rank").asc(), F.col(id_col).asc())
+            .limit(k)
+            .coalesce(1)
+        )
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, state_dir, checkpoint, step)
 
 
 def late_data_audit_sink(
@@ -1048,30 +991,20 @@ def fingerprint_maintenance_sink(
     row)."""
     from radient_spark.operators.reconcile import _MOD, table_fingerprint
 
-    tag = _epoch_tag(checkpoint)
-
-    def _state(spark):
-        if not _state_exists(spark, state_dir):
-            return None
-        rows = spark.read.parquet(state_dir).collect()
-        return rows[0] if rows else None
-
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, state_dir, tag, epoch_id):
-            return
+    def step(df: DataFrame, prior) -> DataFrame:
         fresh = table_fingerprint(df, [c if not isinstance(c, str) else F.col(c) for c in cols])
-        prev = _state(spark)
-        if prev is not None:
+        rows = prior.collect() if prior is not None else []
+        if rows:
+            prev = rows[0]
             fresh = fresh.select(
                 (F.col("n_rows") + F.lit(prev["n_rows"])).alias("n_rows"),
                 (
                     (F.col("checksum") + F.lit(prev["checksum"])) % F.lit(_MOD)
                 ).alias("checksum"),
             )
-        _commit_state(fresh.coalesce(1), state_dir, tag, epoch_id)
+        return fresh.coalesce(1)
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, state_dir, checkpoint, step)
 
 
 def cdc_maintenance_sink(
@@ -1201,15 +1134,10 @@ def psi_drift_sink(
     State is bounded by groups x value-domain bins regardless of event
     volume (the same property that makes the batch PSI cheap).
     Sum-merge is not idempotent, so the read-merge-commit cycle rides
-    _commit_state's epoch marker + staging swap (crash-safe
-    exactly-once), like the CMS/agg sinks.
+    _state_sink (crash-safe exactly-once), like the CMS/agg sinks.
     """
-    tag = _epoch_tag(checkpoint)
 
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        if _epoch_committed(spark, state_dir, tag, epoch_id):
-            return
+    def step(df: DataFrame, prior) -> DataFrame:
         cents = F.round(F.col(value_col) * 100, 0).cast("long")
         fresh = (
             df.select(
@@ -1219,18 +1147,9 @@ def psi_drift_sink(
             .groupBy("g", "bin")
             .agg(F.count(F.lit(1)).alias("cc"))
         )
-        if _state_exists(spark, state_dir):
-            merged = (
-                spark.read.parquet(state_dir)
-                .unionByName(fresh)
-                .groupBy("g", "bin")
-                .agg(F.sum("cc").alias("cc"))
-            )
-        else:
-            merged = fresh
-        _commit_state(merged, state_dir, tag, epoch_id)
+        return _sum_merge(prior, fresh, ["g", "bin"], ["cc"])
 
-    return foreach_batch_sink(stream, checkpoint, batch_fn)
+    return _state_sink(stream, state_dir, checkpoint, step)
 
 
 def read_psi(

@@ -212,6 +212,24 @@ def test_plan_sha_stable_and_config_sensitive(spark, sf_dir):
     b = bench._plan_sha(fn(spark, sf_dir))
     assert a is not None and a == b
 
+    # lambda-API variables (x_<n>) and RDD ids come from session-wide
+    # counters, so the same query built twice renames them
+    from pyspark.sql import functions as F
+
+    def lam():
+        return spark.range(10).select(
+            F.transform(F.array("id", "id"), lambda x: x + 1)
+        )
+
+    def rdd():
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize([(1,)]), "k int"
+        )
+
+    for build in (lam, rdd):
+        a2 = bench._plan_sha(build())
+        assert a2 is not None and a2 == bench._plan_sha(build())
+
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

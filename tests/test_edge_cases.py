@@ -679,3 +679,22 @@ def test_driver_rows_only_ship_through_local_frame():
             and id(n) not in allowed
         ]
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize(
+    "phys_bytes,want",
+    [
+        (16 << 30, "8192m"),  # 16 GB host: half
+        (15_600_000_000, "7438m"),  # rounds down to whole MiB
+        (96 << 30, "49152m"),  # exactly at the 48g cap
+        (1 << 40, "49152m"),  # 1 TB host: capped
+        (1 << 30, "512m"),
+    ],
+)
+def test_driver_mem_default_is_half_of_ram_capped(phys_bytes, want):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half of physical
+    RAM, capped at 48g: a heap above the host's RAM lets the test JVM
+    grow until the kernel's OOM killer ends it."""
+    from radient_spark.session import _driver_mem_for
+
+    assert _driver_mem_for(phys_bytes) == want

@@ -3,6 +3,8 @@ with the batch computation over the same data (SURVEY.md §5.2 item 4)."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1624,3 +1626,187 @@ def test_first_arrival_probe_prunes_base_partitions(spark, tmp_path, monkeypatch
     assert "BroadcastHashJoin" in executed
     assert "LeftSemi" in executed
     assert "Exchange hashpartitioning" not in executed
+
+
+_T0 = datetime.datetime(2024, 1, 1)
+_HOUR = datetime.timedelta(hours=1)
+
+# The sinks built on streaming._state_sink:
+# name -> (input schema, batch 0 rows, batch 1 rows, sink(stream, dir, ck)).
+# bloom's state is its bitmap; its corpus lives next to it.
+_STATE_SINKS = {
+    "sketch": (
+        "k string",
+        [(f"u{i}",) for i in range(40)],
+        [(f"u{i}",) for i in range(30, 70)],
+        lambda s, d, ck: streaming.sketch_maintenance_sink(s, d, ck, "k", p=6),
+    ),
+    "bloom": (
+        "doc_id long, text string",
+        [(1, "doc A"), (2, "doc B"), (3, "doc A")],
+        [(4, "doc B"), (5, "doc C"), (6, "doc D")],
+        lambda s, d, ck: streaming.bloom_ingest_sink(
+            s, d + ".corpus", d, ck, m_bits=4096, k=3
+        ),
+    ),
+    "cms": (
+        "tok string",
+        [("a",)] * 6 + [("b",)] * 2,
+        [("a",), ("c",), ("c",)],
+        lambda s, d, ck: streaming.cms_maintenance_sink(
+            s, d, ck, "tok", depth=3, width=32
+        ),
+    ),
+    "hist": (
+        "v long",
+        [(i,) for i in range(1, 30)],
+        [(i,) for i in range(20, 60)],
+        lambda s, d, ck: streaming.hist_maintenance_sink(s, d, ck, "v"),
+    ),
+    "agg": (
+        "k string, v double",
+        [("a", 1.0), ("b", 2.0), ("a", 3.0)],
+        [("a", 4.0), ("c", 5.0)],
+        lambda s, d, ck: streaming.agg_maintenance_sink(s, d, ck, "k", "v"),
+    ),
+    "cc": (
+        "id_a long, id_b long",
+        [(1, 2), (3, 4), (10, 11)],
+        [(2, 3), (20, 21)],
+        lambda s, d, ck: streaming.cc_maintenance_sink(s, d, ck),
+    ),
+    "hourly": (
+        "event_type string, ts timestamp",
+        [("click", _T0), ("click", _T0 + _HOUR), ("view", _T0)],
+        [("click", _T0), ("view", _T0 + 2 * _HOUR)],
+        lambda s, d, ck: streaming.hourly_count_sink(s, d, ck),
+    ),
+    "scd2": (
+        "k long, attr string, ts long, seq long",
+        [(1, "A", 10, 1), (1, "B", 20, 2), (2, "X", 10, 1)],
+        [(1, "B", 30, 3), (1, "C", 40, 4), (3, "Z", 5, 1)],
+        lambda s, d, ck: streaming.scd2_maintenance_sink(
+            s, d, ck, "k", "attr", "ts", "seq"
+        ),
+    ),
+    "sample": (
+        "rid long, payload string",
+        [(i, f"p{i}") for i in range(20)],
+        [(i, f"p{i}") for i in range(20, 40)],
+        lambda s, d, ck: streaming.sample_maintenance_sink(
+            s, d, ck, "rid", k=5, seed=9
+        ),
+    ),
+    "fingerprint": (
+        "id bigint, name string",
+        [(i, f"n{i}") for i in range(6)],
+        [(i, f"n{i}") for i in range(6, 10)],
+        lambda s, d, ck: streaming.fingerprint_maintenance_sink(
+            s, d, ck, cols=["id", "name"]
+        ),
+    ),
+    "psi": (
+        "event_type string, value double",
+        [("click", 10.0), ("click", 75.5), ("view", 3.0)],
+        [("click", 12.0), ("view", 120.0)],
+        lambda s, d, ck: streaming.psi_drift_sink(s, d, ck),
+    ),
+}
+
+
+class _FailingFs:
+    """A Hadoop FileSystem whose `method` raises. _commit_state calls
+    `create` (the epoch marker) and then `rename` (the swap) only after
+    its staging write, so either one fails the commit between the
+    staging write and the swap."""
+
+    def __init__(self, fs, method):
+        self._fs, self._method = fs, method
+
+    def __getattr__(self, name):
+        if name == self._method:
+            raise RuntimeError(f"injected failure in FileSystem.{name}")
+        return getattr(self._fs, name)
+
+
+@pytest.mark.parametrize("name", sorted(_STATE_SINKS))
+def test_state_sink_crash_windows(spark, tmp_path, monkeypatch, name):
+    """Every sink on the shared read-merge-commit helper survives the
+    three crash windows of _state_sink with its uninterrupted result:
+    (1) a replayed committed epoch is a no-op; (2) a commit that fails
+    between the staging write and the swap leaves the prior state
+    intact, and the retried epoch merges once; (3) a swap interrupted
+    between its renames is rolled forward by the next epoch."""
+    import os
+    import shutil
+
+    schema, rows0, rows1, sink = _STATE_SINKS[name]
+    batches = [spark.createDataFrame(r, schema) for r in (rows0, rows1)]
+
+    def batch_fn(run):
+        captured = []
+        with monkeypatch.context() as m:
+            m.setattr(
+                streaming,
+                "foreach_batch_sink",
+                lambda _stream, _ck, fn: captured.append(fn),
+            )
+            sink(None, str(tmp_path / run), str(tmp_path / f"{run}.ck"))
+        return captured[0]
+
+    def state(run, path=""):
+        d = str(tmp_path / run) + path
+        return sorted(map(tuple, spark.read.parquet(d).collect()), key=repr)
+
+    # (1) uninterrupted run, then a replay of its committed last epoch
+    fn = batch_fn("base")
+    for epoch, b in enumerate(batches):
+        fn(b, epoch)
+    want, want_corpus = state("base"), None
+    if name == "bloom":
+        want_corpus = state("base", ".corpus")
+    fn(batches[1], 1)
+    assert state("base") == want
+    if name == "bloom":
+        assert state("base", ".corpus") == want_corpus
+
+    # (2) the commit dies after the staging write, before the swap
+    for method in ("create", "rename"):
+        for fail_epoch in (0, 1):
+            run = f"fail_{method}_{fail_epoch}"
+            fn = batch_fn(run)
+            for epoch in range(fail_epoch):
+                fn(batches[epoch], epoch)
+            before = state(run) if fail_epoch else None
+            real_fs = streaming._state_fs
+            with monkeypatch.context() as m:
+                m.setattr(
+                    streaming,
+                    "_state_fs",
+                    lambda s, d: (
+                        real_fs(s, d)[0],
+                        _FailingFs(real_fs(s, d)[1], method),
+                    ),
+                )
+                with pytest.raises(RuntimeError, match="injected failure"):
+                    fn(batches[fail_epoch], fail_epoch)
+            if fail_epoch:
+                assert state(run) == before
+            for epoch in range(fail_epoch, 2):
+                fn(batches[epoch], epoch)
+            assert state(run) == want, (method, fail_epoch)
+            if name == "bloom":
+                # the failed attempt's corpus append already landed, and
+                # the retry appends the rows its old bitmap calls new again
+                assert set(state(run, ".corpus")) == set(want_corpus)
+
+    # (3) the swap is interrupted between its two renames
+    fn = batch_fn("swap")
+    fn(batches[0], 0)
+    sd = str(tmp_path / "swap")
+    shutil.rmtree(sd + ".staging", ignore_errors=True)
+    os.rename(sd, sd + ".staging")
+    fn(batches[1], 1)
+    assert state("swap") == want
+    if name == "bloom":
+        assert state("swap", ".corpus") == want_corpus
