@@ -29,10 +29,11 @@ engine):
   artifacts, gann.py:183-191).
 - search is a join: queries descend the forest driver-side (tiny
   matmuls), producing (tree_id, leaf_id, qid, qvec); joining that
-  against the index touches ~n_trees * leaf_size candidates per query,
-  ids are deduped across trees (dropDuplicates ≡ the C hash set), and
-  per-query top-k is a window — Spark's TakeOrdered heap ≡ gann.c's
-  bounded max-heap.
+  against the index touches ~n_trees * leaf_size candidates per query.
+  Candidates are scored in the map stage and cut to the per-query top
+  k by a dense_rank window (≡ gann.c's bounded max-heap); the ids the
+  trees share are dropped only among those <= k rows per query
+  (≡ the C hash set, applied after the heap instead of before it).
 """
 
 from __future__ import annotations
@@ -95,6 +96,46 @@ def _local_parquet_exists(d: str) -> bool:
     )
 
 
+def _ddl(df: DataFrame) -> str:
+    """DDL text of a frame's schema, recorded next to a saved index so
+    `load` reads the parquet typed: a typed read infers no schema, so
+    it runs no Spark job."""
+    return ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+    )
+
+
+def _typed_parquet(spark: SparkSession, meta: dict, *paths: str) -> DataFrame:
+    """Read saved index parquet with the DDL its sidecar recorded at save;
+    sidecars written before the DDL was recorded fall back to schema
+    inference."""
+    reader = spark.read.schema(meta["ddl"]) if "ddl" in meta else spark.read
+    return reader.parquet(*paths)
+
+
+# IVF inserts land as one unpartitioned segment each under
+# cells/_segments/ (Spark's partition discovery skips `_` directories, so
+# a read of cells/ never sees them); `IvfIndex.load` unions them in and
+# `IvfIndex.append_save` folds them into the cells once this many exist,
+# the same cadence as the claim log's streaming._COMPACT_EVERY.
+_FOLD_SEGMENTS = 16
+_SEGMENTS = "cells/_segments"
+# Written by a fold before it changes any cell, removed once the folded
+# segments are gone: the segments it names may already sit in their cells.
+_FOLD_INTENT = "_folding.json"
+
+
+def _segment_dirs(path: str) -> list[str]:
+    """The saved index's segment directories, oldest first."""
+    import glob
+
+    return sorted(
+        d
+        for d in glob.glob(os.path.join(path, _SEGMENTS, "seg-*"))
+        if _local_parquet_exists(d)
+    )
+
+
 class _dynamic_partition_overwrite:
     """Scope spark.sql.sources.partitionOverwriteMode=dynamic so a
     partitioned overwrite rewrites ONLY the partitions present in the
@@ -121,7 +162,9 @@ class _dynamic_partition_overwrite:
 # through the Python lambda API (~300 py4j round trips). Each is the
 # same expression tree as its functions/vector builder (cosine_similarity,
 # dot, -l2_distance), hence bit-equal; doubles are written `0.0D`
-# because a bare `0.0` parses as DECIMAL.
+# because a bare `0.0` parses as DECIMAL. Cosine divides with try_divide,
+# so a zero-norm vector scores NULL (ranked last by `score DESC`) instead
+# of raising DIVIDE_BY_ZERO under ANSI mode.
 _DOT_SQL = (
     "aggregate(zip_with(vector, qvec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
     "0.0D, (acc, x) -> acc + x)"
@@ -136,7 +179,7 @@ def _norm_sql(col: str) -> str:
 
 
 _RERANK_SCORE_SQL = {
-    "cosine": f"{_DOT_SQL} / ({_norm_sql('vector')} * {_norm_sql('qvec')})",
+    "cosine": f"try_divide({_DOT_SQL}, {_norm_sql('vector')} * {_norm_sql('qvec')})",
     "dot": _DOT_SQL,
     "l2": (
         "-sqrt(aggregate(zip_with(vector, qvec, "
@@ -147,17 +190,28 @@ _RERANK_SCORE_SQL = {
 
 
 def _rerank_topk(cand: DataFrame, k: int, metric: str) -> DataFrame:
-    """Shared exact-rerank tail: score candidates, per-query window top-k
-    with the deterministic (score desc, id asc) criterion."""
+    """Exact-rerank tail of every search: per-query top-k by the
+    deterministic (score desc, id asc) criterion, tolerant of duplicate
+    (qid, id) candidates.
+
+    The score is computed in the map stage, so the one shuffle carries
+    only (qid, id, score), cut by a partial WindowGroupLimit. A
+    duplicate candidate has the same vector, hence the same score and
+    the same dense_rank, so `dense_rank <= k` keeps exactly the top k
+    ids plus their copies; the dropDuplicates over those <= k rows per
+    query needs no exchange, because the window already partitions by
+    qid. Cross-tree forest duplicates and rows left twice by an
+    interrupted IVF fold therefore cannot change a result."""
     if metric not in _RERANK_SCORE_SQL:
         raise ValueError(f"unknown metric {metric!r}")
     score = F.expr(_RERANK_SCORE_SQL[metric])
-    scored = cand.withColumn("score", F.round(score, 6))
+    scored = cand.select("qid", "id", F.round(score, 6).alias("score"))
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id").asc())
     return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        scored.withColumn("__rk", F.dense_rank().over(w))
+        .filter(F.col("__rk") <= k)
         .select("qid", "id", "score")
+        .dropDuplicates(["qid", "id"])
     )
 
 
@@ -362,6 +416,14 @@ class IvfIndex:
     centroid-assignment pass (narrow, broadcast centroids), candidates =
     the `n_probes` nearest cells per query. Cells map to parquet
     partitions exactly like the forest's leaves.
+
+    A saved index grows like Milvus's growing/sealed segments (Wang et
+    al., SIGMOD 2021): `append_save` writes each insert as one
+    unpartitioned segment under cells/_segments/ with `cell_id` as a
+    data column, `load` unions the segments with the cell partitions,
+    and `compact` folds segments and tombstones into the touched cells.
+    The probed-cell filter prunes both sides of the union: partition
+    pruning on the cells, parquet statistics on the segments.
     """
 
     def __init__(
@@ -458,15 +520,25 @@ class IvfIndex:
     def append_save(
         self, df: DataFrame, path: str, id_col: str = "id", vec_col: str = "vector"
     ) -> None:
-        """Incremental insert against a SAVED index: assign new rows to
-        the frozen centroids and parquet-append them into the existing
-        cell partitions (dynamic partition append — only touched cells
-        gain files; untouched cells' files are not rewritten). The
-        on-disk analogue of `add` for ingest pipelines."""
+        """Incremental insert against a SAVED index, the on-disk analogue
+        of `add`: assign the new rows to the frozen centroids and write
+        them as ONE new segment, an unpartitioned parquet directory under
+        cells/_segments/ with `cell_id` as a data column (one file per
+        input partition). No cell file is read or rewritten.
+
+        Once _FOLD_SEGMENTS segments exist, `compact` folds them into
+        their cells, so a search reads a bounded number of files however
+        many appends ran."""
+        import time
+        import uuid
+
         base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
-        _assign_cells(base, self.centroids, lattice=self.lattice).write.mode(
-            "append"
-        ).partitionBy("cell_id").parquet(f"{path}/cells")
+        seg = f"seg-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
+        _assign_cells(base, self.centroids, lattice=self.lattice).write.parquet(
+            os.path.join(path, _SEGMENTS, seg)
+        )
+        if len(_segment_dirs(path)) >= _FOLD_SEGMENTS:
+            IvfIndex.compact(df.sparkSession, path)
 
     def delete(self, ids: DataFrame, id_col: str = "id") -> "IvfIndex":
         """Incremental DELETE without rebuild: anti-join the id set out
@@ -494,32 +566,79 @@ class IvfIndex:
         )
 
     @staticmethod
+    def _read(
+        spark: SparkSession, path: str, meta: dict
+    ) -> tuple[DataFrame, DataFrame | None, list[str]]:
+        """(cells, segment rows or None, segment dirs) of a saved index.
+
+        The segments an interrupted fold named in its intent may already
+        sit in their cells, so their rows that do (same id and cell) are
+        dropped here: an interrupted fold never counts a row twice. This
+        takes ids as unique: a re-inserted id that already sat in the
+        same cell before the fold is taken as folded too."""
+        cells = _typed_parquet(spark, meta, f"{path}/cells")
+        segs = _segment_dirs(path)
+        if not segs:
+            return cells, None, segs
+        intent = os.path.join(path, _SEGMENTS, _FOLD_INTENT)
+        folding: set[str] = set()
+        if os.path.exists(intent):
+            with open(intent) as f:
+                folding = set(json.load(f)["segments"])
+        pending = [s for s in segs if os.path.basename(s) in folding]
+        fresh = [s for s in segs if os.path.basename(s) not in folding]
+        rows = _typed_parquet(spark, meta, *fresh) if fresh else None
+        if pending:
+            unfolded = _typed_parquet(spark, meta, *pending).join(
+                cells.select("id", "cell_id"), ["id", "cell_id"], "left_anti"
+            )
+            rows = unfolded if rows is None else rows.unionByName(unfolded)
+        return cells, rows, segs
+
+    @staticmethod
     def compact(spark: SparkSession, path: str) -> None:
-        """Fold tombstones into the cell files: rewrite only the
-        partitions that contain a tombstoned row (dynamic partition
-        overwrite), then drop the sidecar.  Untouched cells' files are
-        never read or rewritten — compaction cost scales with the
-        deleted set's cell footprint, not the index."""
+        """Fold segments and tombstones into the cell files: rewrite only
+        the cells a segment row lands in or a tombstone hits (dynamic
+        partition overwrite, one file per cell), then drop the folded
+        segments and the tombstone sidecar. Untouched cells' files are
+        never read or rewritten, so the cost scales with the folded
+        rows' cell footprint, not the index.
+
+        Before changing any cell, the fold records the segments it
+        covers in cells/_segments/_folding.json. If it stops part way
+        (during the overwrite, or after it but before the segments are
+        deleted), `load` drops the recorded segments' rows that already
+        sit in their cells, and the tombstones still apply, so searches
+        and row counts equal those of a finished fold; running `compact`
+        again finishes it without writing any row twice."""
         import shutil
 
+        with open(f"{path}/centroids.json") as f:
+            meta = json.load(f)
         tomb_dir = f"{path}/tombstones"
-        if not _local_parquet_exists(tomb_dir):
+        cells, seg, segs = IvfIndex._read(spark, path, meta)
+        tombs = (
+            spark.read.parquet(tomb_dir) if _local_parquet_exists(tomb_dir) else None
+        )
+        if seg is None and tombs is None:
             return
-        tombs = spark.read.parquet(tomb_dir)
-        cells = spark.read.parquet(f"{path}/cells")
-        touched = [
-            r["cell_id"]
-            for r in cells.join(tombs, "id", "semi")
-            .select("cell_id")
-            .distinct()
-            .collect()
-        ]
+        intent = os.path.join(path, _SEGMENTS, _FOLD_INTENT)
+        if segs:
+            with open(intent + ".tmp", "w") as f:
+                json.dump({"segments": [os.path.basename(s) for s in segs]}, f)
+            os.replace(intent + ".tmp", intent)
+        hit = None if seg is None else seg.select("cell_id")
+        if tombs is not None:
+            tombed = cells.join(tombs, "id", "semi").select("cell_id")
+            hit = tombed if hit is None else hit.union(tombed)
+        touched = [r["cell_id"] for r in hit.distinct().collect()]
         if touched:
-            kept = (
-                cells.filter(F.col("cell_id").isin(touched))
-                .join(tombs, "id", "left_anti")
-                .transform(lambda d: truncate(d, eager=True))
-            )
+            rows = cells.filter(F.col("cell_id").isin(touched))
+            if seg is not None:
+                rows = rows.unionByName(seg)
+            if tombs is not None:
+                rows = rows.join(tombs, "id", "left_anti")
+            kept = truncate(rows.repartition("cell_id"), eager=True)
             surviving = {
                 r["cell_id"]
                 for r in kept.select("cell_id").distinct().collect()
@@ -539,27 +658,42 @@ class IvfIndex:
                     shutil.rmtree(
                         f"{path}/cells/cell_id={cell}", ignore_errors=True
                     )
+        for s in segs:
+            shutil.rmtree(s)
         shutil.rmtree(tomb_dir, ignore_errors=True)
+        if os.path.exists(intent):
+            os.remove(intent)
 
     def save(self, path: str) -> None:
         """Parquet partitioned by cell_id + centroid JSON — same layout
         contract as AnnIndex.save (cells ≡ leaves). Repartition by the
         partition key first so each cell directory gets one file, not
-        one per (task x cell) — see AnnIndex.save (guide §6)."""
+        one per (task x cell) — see AnnIndex.save (guide §6). The JSON
+        also records the index DDL, for `load`'s typed read. Overwriting
+        cells/ also drops any segments a previous index left there."""
         self.index_df.repartition("cell_id").write.mode(
             "overwrite"
         ).partitionBy("cell_id").parquet(f"{path}/cells")
         with open(f"{path}/centroids.json", "w") as f:
             json.dump(
-                {"centroids": self.centroids.tolist(), "lattice": self.lattice},
+                {
+                    "centroids": self.centroids.tolist(),
+                    "lattice": self.lattice,
+                    "ddl": _ddl(self.index_df),
+                },
                 f,
             )
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "IvfIndex":
+        """The saved cells plus any segments not yet folded, minus
+        tombstoned ids. Reads are typed by the saved DDL, so loading
+        runs no Spark job."""
         with open(f"{path}/centroids.json") as f:
             meta = json.load(f)
-        df = spark.read.parquet(f"{path}/cells")
+        df, seg, _ = IvfIndex._read(spark, path, meta)
+        if seg is not None:
+            df = df.unionByName(seg)
         if _local_parquet_exists(f"{path}/tombstones"):
             df = df.join(
                 spark.read.parquet(f"{path}/tombstones"), "id", "left_anti"
@@ -1274,6 +1408,7 @@ class AnnIndex:
         meta = {
             "dim": self.dim,
             "build_metric": self.build_metric,
+            "ddl": _ddl(self.index_df),
             "trees": [
                 {
                     "depth": t.depth,
@@ -1300,7 +1435,7 @@ class AnnIndex:
                 t.nodes[(int(lvl), int(node))] = (v["w"], v["cut"])
             trees.append(t)
         return AnnIndex(
-            spark.read.parquet(f"{path}/leaves"),
+            _typed_parquet(spark, meta, f"{path}/leaves"),
             trees,
             meta["dim"],
             build_metric=meta.get("build_metric", "euclidean"),
@@ -1358,7 +1493,7 @@ class AnnIndex:
     ) -> DataFrame:
         """Batch search: driver-side forest descent -> (tree, leaf) hit
         list -> statically partition-pruned scan -> broadcast join ->
-        cross-tree id dedup -> per-query top-k.
+        per-query top-k with the cross-tree id dedup (_rerank_topk).
 
         The hit list is known on the driver, so the (tree_id, leaf_id)
         predicate is pushed into the scan as a LITERAL filter, parsed
@@ -1398,10 +1533,8 @@ class AnnIndex:
             for t, leaves in leaves_by_tree.items()
         )
         pruned = self.index_df.filter(F.expr(prune)) if prune else self.index_df
-        cand = pruned.join(
-            F.broadcast(qdf),
-            on=["tree_id", "leaf_id"],
-        ).dropDuplicates(["qid", "id"])  # ≡ the cross-tree hash-set dedup
+        # ids the trees share are dropped by the rerank tail, after the top k
+        cand = pruned.join(F.broadcast(qdf), on=["tree_id", "leaf_id"])
         return _rerank_topk(cand, k, metric)
 
     def search_df(
@@ -1456,9 +1589,7 @@ class AnnIndex:
         qdf = queries.select(
             F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")
         ).mapInPandas(descend, "qid long, tree_id int, leaf_id int, qvec array<float>")
-        cand = self.index_df.join(qdf, on=["tree_id", "leaf_id"]).dropDuplicates(
-            ["qid", "id"]
-        )
+        cand = self.index_df.join(qdf, on=["tree_id", "leaf_id"])
         return _rerank_topk(cand, k, metric)
 
 

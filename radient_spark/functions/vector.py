@@ -86,8 +86,9 @@ def norm(a: Column | str) -> Column:
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """dot(a,b) / (|a| |b|)."""
-    return dot(a, b) / (norm(a) * norm(b))
+    """dot(a,b) / (|a| |b|); NULL when either vector has zero norm (a
+    plain division raises DIVIDE_BY_ZERO there under ANSI mode)."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def cosine_distance(a: Column | str, b: Column | str) -> Column:

@@ -440,16 +440,19 @@ def ivf_ingest_sink(
 ):
     """Continuously grow a saved IVF index from a vector stream: per
     micro-batch, assign the new vectors to the index's FROZEN centroids
-    (map-only broadcast argmin) and parquet-append them into their cell
-    partitions (IvfIndex.append_save) — streaming index maintenance with
-    no rebuild, the incremental half of the reference's GANN `insert()`
-    contract (/root/reference/radient/tasks/sinks/local/gann.py:196-215)
+    (map-only broadcast argmin) and write them as one new segment under
+    cells/_segments/ (IvfIndex.append_save) — streaming index
+    maintenance with no rebuild, the incremental half of the reference's
+    GANN `insert()` contract (radient/tasks/sinks/local/gann.py:196-215)
     done as an always-on pipeline.
 
     The index must already exist at `index_path` (IvfIndex.build + save
     seeds the centroids); the checkpoint gives exactly-once per input
-    file, and since append touches only the cells the batch lands in,
-    steady-state cost per batch is one scan of the batch itself."""
+    file. A batch writes one file per input partition and touches no
+    cell file, so steady-state cost per batch is one scan of the batch
+    itself; every 16th segment, the append folds the segments into
+    their cells (IvfIndex.compact), so searches read a bounded number
+    of files however long the stream runs."""
     from radient_spark.ann import IvfIndex
 
     def batch_fn(df: DataFrame, epoch_id: int) -> None:

@@ -645,9 +645,9 @@ def test_list_search_plan_is_local_and_pruned(spark, emb, tmp_path, monkeypatch,
 def test_rerank_score_bit_equal_to_vector_builders(spark, metric):
     """The rerank score is parsed from constant SQL text; it must be the
     same expression as the functions/vector builders, bit for bit,
-    including a zero vector. Under ANSI mode (Spark 4's default) a
-    cosine over a zero vector is a division by zero, and both forms
-    raise it alike."""
+    including a zero vector. A cosine over a zero vector divides with
+    try_divide, so under ANSI mode (Spark 4's default) both forms give
+    NULL instead of raising DIVIDE_BY_ZERO."""
     import math
     import struct
 
@@ -669,10 +669,20 @@ def test_rerank_score_bit_equal_to_vector_builders(spark, metric):
         "l2": -V.l2_distance("vector", "qvec"),
     }[metric]
     if metric == "cosine":
+        # a zero-norm side scores NULL in both forms (try_divide), and the
+        # rerank ranks it last instead of failing the query
         zero = cand.filter("NOT (exists(vector, x -> x != 0) AND exists(qvec, x -> x != 0))")
         for score in (F.expr(_RERANK_SCORE_SQL[metric]), ref):
-            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-                zero.select(score).collect()
+            assert [r[0] for r in zero.select(score).collect()] == [None] * zero.count()
+        w = Window.partitionBy("qid").orderBy(F.col("score").desc_nulls_last())
+        last = (
+            _rerank_topk(cand, len(vecs), metric)
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("qid") == 0)
+            .orderBy(F.col("rn").desc())
+            .first()
+        )
+        assert (last["id"], last["score"]) == (len(vecs) - 1, None)
         cand = cand.filter("exists(vector, x -> x != 0) AND exists(qvec, x -> x != 0)")
     rows = cand.select(
         "qid", "id", F.expr(_RERANK_SCORE_SQL[metric]).alias("got"), ref.alias("want")
@@ -695,3 +705,239 @@ def test_rerank_score_bit_equal_to_vector_builders(spark, metric):
     got_rows = sorted((r["qid"], r["id"], bits(r["score"])) for r in top.collect())
     want_rows = sorted((r["qid"], r["id"], bits(r["score"])) for r in want.collect())
     assert got_rows == want_rows
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _parquet_files(d):
+    import os
+
+    return sum(1 for _r, _d, fs in os.walk(d) for f in fs if f.endswith(".parquet"))
+
+
+@pytest.mark.parametrize("lattice", [False, True], ids=["float", "lattice"])
+def test_segmented_index_matches_in_memory_add(spark, emb, tmp_path, lattice):
+    """A saved index grown by append_save (one segment per insert, read
+    back as cells + segments) returns the same rows as the same inserts
+    held in memory through `add`: one probe, a partial probe and every
+    cell, through list search and search_df."""
+    from radient_spark.ann import IvfIndex, _segment_dirs
+
+    n_cells = 12
+    base = emb.filter(F.col("id") % 3 != 0)
+    batches = [
+        emb.filter((F.col("id") % 3 == 0) & (F.col("id") % 2 == b)) for b in (0, 1)
+    ]
+    if lattice:
+        idx = IvfIndex.build_lattice(base, n_cells=n_cells, iters=1, seed=7)
+    else:
+        idx = IvfIndex.build(base, n_cells=n_cells, seed=7)
+    path = str(tmp_path / "seg")
+    idx.save(path)
+    mem = idx
+    for b in batches:
+        idx.append_save(b, path)
+        mem = mem.add(b)
+    assert len(_segment_dirs(path)) == len(batches)
+    disk = IvfIndex.load(spark, path)
+    assert disk.lattice == lattice
+    assert disk.index_df.count() == mem.index_df.count() == emb.count()
+    rows = emb.orderBy("id").limit(6).collect()
+    qs = [(int(r["id"]), list(r["vector"])) for r in rows]
+    qdf = spark.createDataFrame(qs, "qid bigint, qvec array<float>")
+    for n_probes in (1, 8, n_cells):
+        want = _sorted_rows(mem.search(qs, k=5, n_probes=n_probes))
+        assert want and _sorted_rows(disk.search(qs, k=5, n_probes=n_probes)) == want
+        want_df = _sorted_rows(mem.search_df(qdf, k=5, n_probes=n_probes))
+        assert want_df and _sorted_rows(disk.search_df(qdf, k=5, n_probes=n_probes)) == want_df
+
+
+def test_append_save_adds_one_file_and_folds_at_threshold(spark, emb, tmp_path, monkeypatch):
+    """A 1-partition insert adds exactly one parquet file, which a read of
+    cells/ alone does not see; once _FOLD_SEGMENTS segments exist the
+    append folds them into their cells, one file per cell."""
+    import os
+
+    import radient_spark.ann as ann_mod
+    from radient_spark.ann import IvfIndex
+
+    path = str(tmp_path / "ivf")
+    idx = IvfIndex.build(emb, n_cells=8, seed=42)
+    idx.save(path)
+    n = emb.count()
+    before = _parquet_files(f"{path}/cells")
+    batch = emb.limit(50).withColumn("id", F.col("id") + 10**6).coalesce(1)
+    assert batch.rdd.getNumPartitions() == 1
+    idx.append_save(batch, path)
+    assert _parquet_files(f"{path}/cells") == before + 1
+    assert spark.read.parquet(f"{path}/cells").count() == n
+    assert IvfIndex.load(spark, path).index_df.count() == n + 50
+
+    monkeypatch.setattr(ann_mod, "_FOLD_SEGMENTS", 3)
+    for b in (2, 3):
+        idx.append_save(batch.withColumn("id", F.col("id") + b * 10**6), path)
+    assert ann_mod._segment_dirs(path) == []
+    assert not os.path.exists(f"{path}/cells/_segments/{ann_mod._FOLD_INTENT}")
+    cells = spark.read.parquet(f"{path}/cells")
+    assert cells.count() == cells.select("id").distinct().count() == n + 150
+    assert _parquet_files(f"{path}/cells") == cells.select("cell_id").distinct().count()
+
+
+@pytest.mark.parametrize(
+    "window", ["overwrite_fails", "overwrite_partial", "before_segment_delete"]
+)
+def test_fold_crash_windows(spark, emb, tmp_path, monkeypatch, window):
+    """A fold of segments and tombstones that stops during the cell
+    overwrite (before any cell commits, or after half of them did) or
+    after it but before the segments are deleted: searches and row counts
+    equal those of an uninterrupted fold, and a second fold converges
+    without writing any row twice."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from radient_spark.ann import IvfIndex, _segment_dirs
+
+    base = emb.filter(F.col("id") % 4 != 0)
+    idx = IvfIndex.build(base, n_cells=8, seed=42)
+    rows = emb.orderBy("id").limit(5).collect()
+    qs = [(int(r["id"]), list(r["vector"])) for r in rows]
+
+    def grown(path):
+        idx.save(path)
+        for b in (0, 4):
+            idx.append_save(emb.filter(F.col("id") % 8 == b), path)
+        idx.tombstone_save(emb.filter(F.col("id") % 7 == 0), path)
+        return path
+
+    def observed(path):
+        loaded = IvfIndex.load(spark, path)
+        return (
+            loaded.index_df.count(),
+            [_sorted_rows(loaded.search(qs, k=5, n_probes=p)) for p in (2, 8)],
+        )
+
+    ref = grown(str(tmp_path / "ref"))
+    IvfIndex.compact(spark, ref)
+    want = observed(ref)
+    assert want[0] == emb.filter(F.col("id") % 7 != 0).count()
+
+    p = grown(str(tmp_path / "crash"))
+    if window == "before_segment_delete":
+        real_rmtree = shutil.rmtree
+
+        def rmtree(d, *a, **kw):
+            if "_segments" in str(d):
+                raise RuntimeError("injected: crash before segment delete")
+            return real_rmtree(d, *a, **kw)
+
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+    else:
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *a, **kw):
+            if str(path).endswith("/cells"):
+                if window == "overwrite_partial":
+                    cells = sorted(r[0] for r in self._df.select("cell_id").distinct().collect())
+                    half = self._df.filter(F.col("cell_id").isin(cells[: len(cells) // 2]))
+                    real_parquet(half.write.mode("overwrite").partitionBy("cell_id"), path)
+                raise RuntimeError("injected: crash mid-overwrite")
+            return real_parquet(self, path, *a, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Exception, match="injected"):
+        IvfIndex.compact(spark, p)
+    monkeypatch.undo()
+    assert _segment_dirs(p)
+    assert observed(p) == want
+
+    IvfIndex.compact(spark, p)
+    assert _segment_dirs(p) == []
+    assert not os.path.exists(f"{p}/tombstones")
+    assert observed(p) == want
+    on_disk = spark.read.parquet(f"{p}/cells")
+    assert on_disk.count() == on_disk.select("id").distinct().count() == want[0]
+    assert _sorted_rows(on_disk) == _sorted_rows(spark.read.parquet(f"{ref}/cells"))
+
+
+def test_forest_rerank_one_shuffle_bit_equal_to_dedup_first(spark, emb):
+    """Forest list search shuffles once, carrying only (qid, id, score),
+    with no SortAggregate; its rows equal, bit for bit, the old form that
+    dropped cross-tree duplicate ids before a row_number top-k."""
+    import struct
+
+    from pyspark.sql import Window
+
+    from radient_spark.ann import _RERANK_SCORE_SQL
+
+    idx = AnnIndex.build(emb, n_trees=3, max_leaf_size=100, spill=0.2, seed=42)
+    rows = emb.orderBy("id").limit(10).collect()
+    qs = [(int(r["id"]), list(r["vector"])) for r in rows]
+    res = idx.search(qs, k=10)
+
+    plan = res._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()  # exchanges placed, before execution
+    nodes, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    names = [n.nodeName() for n in nodes]
+    shuffles = [n for n in nodes if n.nodeName() == "Exchange"]
+    assert len(shuffles) == 1, names
+    out = shuffles[0].child().output()
+    assert {out.apply(i).name() for i in range(out.size())} == {"qid", "id", "score"}
+    assert "SortAggregate" not in names and "ObjectHashAggregate" not in names, names
+
+    hits = []
+    for qid, vec in qs:
+        q = np.asarray(vec, dtype=np.float64)
+        q = q / (np.linalg.norm(q) + 1e-12)
+        hits += [(qid, t, tree.descend(q), vec) for t, tree in enumerate(idx.trees)]
+    qdf = spark.createDataFrame(hits, "qid bigint, tree_id int, leaf_id int, qvec array<float>")
+    cand = idx.index_df.join(qdf, ["tree_id", "leaf_id"])
+    deduped = cand.dropDuplicates(["qid", "id"])
+    assert cand.count() > deduped.count()  # the trees share candidates
+    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id").asc())
+    old = (
+        deduped.withColumn("score", F.round(F.expr(_RERANK_SCORE_SQL["cosine"]), 6))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 10)
+        .select("qid", "id", "score")
+    )
+
+    def bits(df):
+        return sorted((r["qid"], r["id"], struct.pack("<d", r["score"])) for r in df.collect())
+
+    assert bits(res) == bits(old)
+    assert len(bits(res)) == 10 * len(qs)
+
+
+def test_load_without_ddl_infers_schema(spark, emb, tmp_path):
+    """Sidecars written before the index DDL was recorded still load,
+    through schema inference, with the same rows and columns."""
+    import json
+
+    from radient_spark.ann import IvfIndex
+
+    for kind, sidecar, idx in (
+        ("ivf", "centroids.json", IvfIndex.build(emb, n_cells=8, seed=42)),
+        ("forest", "forest.json", AnnIndex.build(emb, n_trees=2, max_leaf_size=100, seed=42)),
+    ):
+        path = str(tmp_path / kind)
+        idx.save(path)
+        load = IvfIndex.load if kind == "ivf" else AnnIndex.load
+        typed = load(spark, path).index_df
+        with open(f"{path}/{sidecar}") as f:
+            meta = json.load(f)
+        del meta["ddl"]
+        with open(f"{path}/{sidecar}", "w") as f:
+            json.dump(meta, f)
+        inferred = load(spark, path).index_df
+        assert inferred.schema == typed.schema, kind
+        assert _sorted_rows(inferred) == _sorted_rows(typed), kind

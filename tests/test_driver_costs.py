@@ -100,16 +100,18 @@ def test_list_search_builds_in_few_round_trips(spark, indexes, kind):
 def test_ivf_load_runs_no_listing_job(spark, indexes):
     """64 cell_id= dirs are above Spark's default parallel-discovery
     threshold (32), which listed them with a 64-task job on every load;
-    the session lists on the driver, leaving only the schema read."""
-    from radient_spark.ann import IvfIndex
+    the session lists on the driver. The schema read is gone too: both
+    index kinds read with the DDL their sidecar recorded at save."""
+    from radient_spark.ann import AnnIndex, IvfIndex
 
     d, _ = indexes
     cells = spark.read.parquet(f"{d}/ivf/cells").select("cell_id").distinct().count()
     assert cells > 32, cells
-    IvfIndex.load(spark, f"{d}/ivf")
-    before = _jobs(spark)
-    IvfIndex.load(spark, f"{d}/ivf")
-    assert _jobs(spark) - before <= 1
+    for load, sub in ((IvfIndex.load, "ivf"), (AnnIndex.load, "forest")):
+        load(spark, f"{d}/{sub}")
+        before = _jobs(spark)
+        load(spark, f"{d}/{sub}")
+        assert _jobs(spark) - before == 0, sub
 
 
 def test_prior_claims_probe_over_deltas_runs_no_job(spark, tmp_path):
