@@ -190,28 +190,32 @@ _RERANK_SCORE_SQL = {
 
 
 def _rerank_topk(cand: DataFrame, k: int, metric: str) -> DataFrame:
-    """Exact-rerank tail of every search: per-query top-k by the
-    deterministic (score desc, id asc) criterion, tolerant of duplicate
-    (qid, id) candidates.
+    """Exact-rerank tail of every search: per query, the top k distinct
+    ids by (best score desc, id asc).
 
-    The score is computed in the map stage, so the one shuffle carries
-    only (qid, id, score), cut by a partial WindowGroupLimit. A
-    duplicate candidate has the same vector, hence the same score and
-    the same dense_rank, so `dense_rank <= k` keeps exactly the top k
-    ids plus their copies; the dropDuplicates over those <= k rows per
-    query needs no exchange, because the window already partitions by
-    qid. Cross-tree forest duplicates and rows left twice by an
-    interrupted IVF fold therefore cannot change a result."""
+    The score is computed in the map stage, so the one shuffle, on qid,
+    carries only (qid, id, score). An id can be a candidate more than
+    once: a forest spills it into several trees, an interrupted IVF fold
+    leaves a segment row next to its folded copy, and an id inserted
+    twice with different vectors (an upsert without a tombstone) sits in
+    the index twice. The groupBy keeps each (qid, id) once with its best
+    score; it needs no exchange of its own, because the rows are already
+    partitioned by qid, and neither does the row_number window after it.
+    So duplicates never cost a result slot and never change a result."""
     if metric not in _RERANK_SCORE_SQL:
         raise ValueError(f"unknown metric {metric!r}")
     score = F.expr(_RERANK_SCORE_SQL[metric])
-    scored = cand.select("qid", "id", F.round(score, 6).alias("score"))
+    best = (
+        cand.select("qid", "id", F.round(score, 6).alias("score"))
+        .repartition("qid")
+        .groupBy("qid", "id")
+        .agg(F.max("score").alias("score"))
+    )
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id").asc())
     return (
-        scored.withColumn("__rk", F.dense_rank().over(w))
-        .filter(F.col("__rk") <= k)
+        best.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
         .select("qid", "id", "score")
-        .dropDuplicates(["qid", "id"])
     )
 
 
@@ -421,9 +425,11 @@ class IvfIndex:
     al., SIGMOD 2021): `append_save` writes each insert as one
     unpartitioned segment under cells/_segments/ with `cell_id` as a
     data column, `load` unions the segments with the cell partitions,
-    and `compact` folds segments and tombstones into the touched cells.
-    The probed-cell filter prunes both sides of the union: partition
-    pruning on the cells, parquet statistics on the segments.
+    and a fold appends the segment rows to their cells, one new file
+    per touched cell. The probed-cell filter prunes both sides of the
+    union: partition pruning on the cells, parquet statistics on the
+    segments. `compact` also folds tombstones, by rewriting the cells
+    they hit.
     """
 
     def __init__(
@@ -526,19 +532,25 @@ class IvfIndex:
         cells/_segments/ with `cell_id` as a data column (one file per
         input partition). No cell file is read or rewritten.
 
-        Once _FOLD_SEGMENTS segments exist, `compact` folds them into
-        their cells, so a search reads a bounded number of files however
-        many appends ran."""
+        When _FOLD_SEGMENTS segments already exist, the append first
+        folds them into their cells (`_fold`: an append of the segment
+        rows alone, so it costs O(segment rows), not O(index)), which
+        keeps the segments a search scans whole at most _FOLD_SEGMENTS.
+        The fold runs BEFORE the new segment is written: if it fails, the
+        call fails with this batch not on disk, so a replay of the batch
+        (a streaming epoch retry) writes it once."""
         import time
         import uuid
 
+        spark = df.sparkSession
+        if len(_segment_dirs(path)) >= _FOLD_SEGMENTS:
+            with open(f"{path}/centroids.json") as f:
+                IvfIndex._fold(spark, path, json.load(f))
         base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vector"))
         seg = f"seg-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
         _assign_cells(base, self.centroids, lattice=self.lattice).write.parquet(
             os.path.join(path, _SEGMENTS, seg)
         )
-        if len(_segment_dirs(path)) >= _FOLD_SEGMENTS:
-            IvfIndex.compact(df.sparkSession, path)
 
     def delete(self, ids: DataFrame, id_col: str = "id") -> "IvfIndex":
         """Incremental DELETE without rebuild: anti-join the id set out
@@ -572,10 +584,11 @@ class IvfIndex:
         """(cells, segment rows or None, segment dirs) of a saved index.
 
         The segments an interrupted fold named in its intent may already
-        sit in their cells, so their rows that do (same id and cell) are
-        dropped here: an interrupted fold never counts a row twice. This
-        takes ids as unique: a re-inserted id that already sat in the
-        same cell before the fold is taken as folded too."""
+        sit in their cells, so their rows that do (same id, cell and
+        vector) are dropped here: an interrupted fold never counts a row
+        twice. A row inserted twice, identical, with one copy in its
+        cell before the fold, is taken as folded too: the count loses
+        that copy, searches do not (they return each id once)."""
         cells = _typed_parquet(spark, meta, f"{path}/cells")
         segs = _segment_dirs(path)
         if not segs:
@@ -590,55 +603,84 @@ class IvfIndex:
         rows = _typed_parquet(spark, meta, *fresh) if fresh else None
         if pending:
             unfolded = _typed_parquet(spark, meta, *pending).join(
-                cells.select("id", "cell_id"), ["id", "cell_id"], "left_anti"
+                cells.select("id", "cell_id", "vector"),
+                ["id", "cell_id", "vector"],
+                "left_anti",
             )
             rows = unfolded if rows is None else rows.unionByName(unfolded)
         return cells, rows, segs
 
     @staticmethod
-    def compact(spark: SparkSession, path: str) -> None:
-        """Fold segments and tombstones into the cell files: rewrite only
-        the cells a segment row lands in or a tombstone hits (dynamic
-        partition overwrite, one file per cell), then drop the folded
-        segments and the tombstone sidecar. Untouched cells' files are
-        never read or rewritten, so the cost scales with the folded
-        rows' cell footprint, not the index.
+    def _fold(spark: SparkSession, path: str, meta: dict) -> None:
+        """Move every segment's rows into their cells: one partitioned
+        append of the segment rows (one new file per touched cell), then
+        drop the segments. No cell file is rewritten, and none is read
+        unless an interrupted fold is being finished, so a fold costs
+        O(segment rows) whatever the index size. Each fold adds at most
+        one file per cell; `compact` with tombstones merges the files of
+        the cells it rewrites.
 
-        Before changing any cell, the fold records the segments it
-        covers in cells/_segments/_folding.json. If it stops part way
-        (during the overwrite, or after it but before the segments are
-        deleted), `load` drops the recorded segments' rows that already
-        sit in their cells, and the tombstones still apply, so searches
-        and row counts equal those of a finished fold; running `compact`
-        again finishes it without writing any row twice."""
+        Before the append, the fold records the segments it covers in
+        cells/_segments/_folding.json. If it stops during the append
+        (some cells' files committed, others not) or after it but before
+        the segments are deleted, `_read` drops the recorded segments'
+        rows that already sit in their cells, so searches and row counts
+        equal those of a finished fold; the next fold appends only the
+        rows still missing, so it converges without adding any row
+        twice. Injection tests cover these windows."""
+        import shutil
+
+        _cells, seg, segs = IvfIndex._read(spark, path, meta)
+        if seg is None:
+            return
+        intent = os.path.join(path, _SEGMENTS, _FOLD_INTENT)
+        with open(intent + ".tmp", "w") as f:
+            json.dump({"segments": [os.path.basename(s) for s in segs]}, f)
+        os.replace(intent + ".tmp", intent)
+        seg.repartition("cell_id").write.mode("append").partitionBy(
+            "cell_id"
+        ).parquet(f"{path}/cells")
+        for s in segs:
+            shutil.rmtree(s)
+        os.remove(intent)
+
+    @staticmethod
+    def compact(spark: SparkSession, path: str) -> None:
+        """Fold segments (`_fold`), then tombstones, into the cell files.
+        Tombstones rewrite only the partitions that contain a tombstoned
+        row (dynamic partition overwrite, one file per cell, which also
+        merges the files earlier folds appended there), then the sidecar
+        is dropped. Untouched cells' files are never read or rewritten.
+
+        A failure before the overwrite commits leaves the tombstones in
+        place, and `load` still applies them. The overwrite itself is not
+        atomic per cell: Spark's dynamic-partition commit deletes a
+        touched cell's directory and then renames the new one into
+        place, so a crash between the two loses that cell's rows."""
         import shutil
 
         with open(f"{path}/centroids.json") as f:
             meta = json.load(f)
+        IvfIndex._fold(spark, path, meta)
         tomb_dir = f"{path}/tombstones"
-        cells, seg, segs = IvfIndex._read(spark, path, meta)
-        tombs = (
-            spark.read.parquet(tomb_dir) if _local_parquet_exists(tomb_dir) else None
-        )
-        if seg is None and tombs is None:
+        if not _local_parquet_exists(tomb_dir):
             return
-        intent = os.path.join(path, _SEGMENTS, _FOLD_INTENT)
-        if segs:
-            with open(intent + ".tmp", "w") as f:
-                json.dump({"segments": [os.path.basename(s) for s in segs]}, f)
-            os.replace(intent + ".tmp", intent)
-        hit = None if seg is None else seg.select("cell_id")
-        if tombs is not None:
-            tombed = cells.join(tombs, "id", "semi").select("cell_id")
-            hit = tombed if hit is None else hit.union(tombed)
-        touched = [r["cell_id"] for r in hit.distinct().collect()]
+        tombs = spark.read.parquet(tomb_dir)
+        cells = _typed_parquet(spark, meta, f"{path}/cells")
+        touched = [
+            r["cell_id"]
+            for r in cells.join(tombs, "id", "semi")
+            .select("cell_id")
+            .distinct()
+            .collect()
+        ]
         if touched:
-            rows = cells.filter(F.col("cell_id").isin(touched))
-            if seg is not None:
-                rows = rows.unionByName(seg)
-            if tombs is not None:
-                rows = rows.join(tombs, "id", "left_anti")
-            kept = truncate(rows.repartition("cell_id"), eager=True)
+            kept = (
+                cells.filter(F.col("cell_id").isin(touched))
+                .join(tombs, "id", "left_anti")
+                .repartition("cell_id")
+                .transform(lambda d: truncate(d, eager=True))
+            )
             surviving = {
                 r["cell_id"]
                 for r in kept.select("cell_id").distinct().collect()
@@ -658,11 +700,7 @@ class IvfIndex:
                     shutil.rmtree(
                         f"{path}/cells/cell_id={cell}", ignore_errors=True
                     )
-        for s in segs:
-            shutil.rmtree(s)
         shutil.rmtree(tomb_dir, ignore_errors=True)
-        if os.path.exists(intent):
-            os.remove(intent)
 
     def save(self, path: str) -> None:
         """Parquet partitioned by cell_id + centroid JSON — same layout

@@ -450,9 +450,12 @@ def ivf_ingest_sink(
     seeds the centroids); the checkpoint gives exactly-once per input
     file. A batch writes one file per input partition and touches no
     cell file, so steady-state cost per batch is one scan of the batch
-    itself; every 16th segment, the append folds the segments into
-    their cells (IvfIndex.compact), so searches read a bounded number
-    of files however long the stream runs."""
+    itself. Once 16 segments exist, the next batch first folds them
+    into their cells (an append of the segment rows alone, no cell
+    rewrite), so a search scans at most 16 segments however long the
+    stream runs. The fold runs before the batch's own segment is
+    written: a batch whose fold fails leaves nothing on disk, and the
+    replayed epoch writes its rows once."""
     from radient_spark.ann import IvfIndex
 
     def batch_fn(df: DataFrame, epoch_id: int) -> None:

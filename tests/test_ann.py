@@ -757,7 +757,8 @@ def test_segmented_index_matches_in_memory_add(spark, emb, tmp_path, lattice):
 def test_append_save_adds_one_file_and_folds_at_threshold(spark, emb, tmp_path, monkeypatch):
     """A 1-partition insert adds exactly one parquet file, which a read of
     cells/ alone does not see; once _FOLD_SEGMENTS segments exist the
-    append folds them into their cells, one file per cell."""
+    next append first folds them into their cells, adding one file per
+    touched cell and rewriting none, then writes its own segment."""
     import os
 
     import radient_spark.ann as ann_mod
@@ -778,22 +779,73 @@ def test_append_save_adds_one_file_and_folds_at_threshold(spark, emb, tmp_path, 
     monkeypatch.setattr(ann_mod, "_FOLD_SEGMENTS", 3)
     for b in (2, 3):
         idx.append_save(batch.withColumn("id", F.col("id") + b * 10**6), path)
-    assert ann_mod._segment_dirs(path) == []
+    assert len(ann_mod._segment_dirs(path)) == 3  # at the threshold: no fold yet
+    old_files = {
+        os.path.join(r, f)
+        for r, _d, fs in os.walk(f"{path}/cells")
+        if "_segments" not in r
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    idx.append_save(batch.withColumn("id", F.col("id") + 4 * 10**6), path)
+    assert len(ann_mod._segment_dirs(path)) == 1  # folded, then this batch's segment
     assert not os.path.exists(f"{path}/cells/_segments/{ann_mod._FOLD_INTENT}")
     cells = spark.read.parquet(f"{path}/cells")
     assert cells.count() == cells.select("id").distinct().count() == n + 150
-    assert _parquet_files(f"{path}/cells") == cells.select("cell_id").distinct().count()
+    folded = cells.filter(F.col("id") >= 10**6).select("cell_id").distinct().count()
+    assert all(os.path.exists(f) for f in old_files)  # no cell file rewritten
+    assert _parquet_files(f"{path}/cells") == before + folded + 1
+    assert IvfIndex.load(spark, path).index_df.count() == n + 200
+
+
+def test_failed_fold_leaves_append_unwritten(spark, emb, tmp_path, monkeypatch):
+    """append_save folds BEFORE it writes its own segment, so a fold that
+    fails fails the append with the batch not on disk, and a retried
+    append (a replayed streaming epoch) leaves each id once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import radient_spark.ann as ann_mod
+    from radient_spark.ann import IvfIndex
+
+    monkeypatch.setattr(ann_mod, "_FOLD_SEGMENTS", 2)
+    path = str(tmp_path / "ivf")
+    idx = IvfIndex.build(emb, n_cells=8, seed=42)
+    idx.save(path)
+    n = emb.count()
+    batches = [emb.limit(40).withColumn("id", F.col("id") + b * 10**6) for b in (1, 2, 3)]
+    for b in batches[:2]:
+        idx.append_save(b, path)
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, p, *a, **kw):
+        if str(p).endswith("/cells"):
+            raise RuntimeError("injected: fold fails")
+        return real_parquet(self, p, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(Exception, match="injected"):
+            idx.append_save(batches[2], path)
+    assert len(ann_mod._segment_dirs(path)) == 2
+    assert IvfIndex.load(spark, path).index_df.count() == n + 80
+
+    idx.append_save(batches[2], path)
+    loaded = IvfIndex.load(spark, path).index_df
+    assert loaded.count() == loaded.select("id").distinct().count() == n + 120
+    assert len(ann_mod._segment_dirs(path)) == 1
 
 
 @pytest.mark.parametrize(
-    "window", ["overwrite_fails", "overwrite_partial", "before_segment_delete"]
+    "window",
+    ["append_fails", "append_partial", "before_segment_delete", "tombstone_overwrite_fails"],
 )
 def test_fold_crash_windows(spark, emb, tmp_path, monkeypatch, window):
-    """A fold of segments and tombstones that stops during the cell
-    overwrite (before any cell commits, or after half of them did) or
-    after it but before the segments are deleted: searches and row counts
-    equal those of an uninterrupted fold, and a second fold converges
-    without writing any row twice."""
+    """A compact that stops during the fold's append to the cells (before
+    any cell file commits, or after half of the cells got theirs), after
+    the append but before the segments are deleted, or in the tombstone
+    overwrite before it commits: searches and row counts equal those of
+    an uninterrupted compact, and a second compact converges without
+    writing any row twice."""
     import os
     import shutil
 
@@ -837,21 +889,26 @@ def test_fold_crash_windows(spark, emb, tmp_path, monkeypatch, window):
         monkeypatch.setattr(shutil, "rmtree", rmtree)
     else:
         real_parquet = DataFrameWriter.parquet
+        writes = []
 
         def parquet(self, path, *a, **kw):
             if str(path).endswith("/cells"):
-                if window == "overwrite_partial":
+                writes.append(path)
+                if window == "tombstone_overwrite_fails" and len(writes) == 1:
+                    return real_parquet(self, path, *a, **kw)  # the fold's append
+                if window == "append_partial":
                     cells = sorted(r[0] for r in self._df.select("cell_id").distinct().collect())
                     half = self._df.filter(F.col("cell_id").isin(cells[: len(cells) // 2]))
-                    real_parquet(half.write.mode("overwrite").partitionBy("cell_id"), path)
-                raise RuntimeError("injected: crash mid-overwrite")
+                    real_parquet(half.write.mode("append").partitionBy("cell_id"), path)
+                raise RuntimeError("injected: crash mid-write")
             return real_parquet(self, path, *a, **kw)
 
         monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     with pytest.raises(Exception, match="injected"):
         IvfIndex.compact(spark, p)
     monkeypatch.undo()
-    assert _segment_dirs(p)
+    assert bool(_segment_dirs(p)) == (window != "tombstone_overwrite_fails")
+    assert os.path.exists(f"{p}/tombstones")
     assert observed(p) == want
 
     IvfIndex.compact(spark, p)
@@ -861,6 +918,47 @@ def test_fold_crash_windows(spark, emb, tmp_path, monkeypatch, window):
     on_disk = spark.read.parquet(f"{p}/cells")
     assert on_disk.count() == on_disk.select("id").distinct().count() == want[0]
     assert _sorted_rows(on_disk) == _sorted_rows(spark.read.parquet(f"{ref}/cells"))
+
+
+def test_revectored_id_returned_once_with_best_score(spark, emb, tmp_path):
+    """An id inserted again with another vector (an upsert without a
+    tombstone) sits in the index twice. Every IVF search returns it once,
+    with the better of its two scores, and still fills all k slots, in
+    memory (`add`) and on disk (a segment next to the cells)."""
+    from radient_spark.ann import IvfIndex
+
+    n_cells, k = 6, 5
+    idx = IvfIndex.build(emb, n_cells=n_cells, seed=42)
+    pts = emb.orderBy("id").collect()
+    q = pts[0]
+    moved = pts[-1]["id"]  # re-inserted with the query's own vector
+    upsert = spark.createDataFrame([(moved, list(q["vector"]))], "id bigint, vector array<float>")
+    path = str(tmp_path / "ivf")
+    idx.save(path)
+    idx.append_save(upsert, path)
+
+    X = np.array([r["vector"] for r in pts] + [q["vector"]], dtype=np.float64)
+    ids = [r["id"] for r in pts] + [moved]
+    qv = np.asarray(q["vector"], dtype=np.float64)
+    sc = X @ qv / (np.linalg.norm(X, axis=1) * np.linalg.norm(qv))
+    best = {}
+    for i, s in zip(ids, sc):
+        best[i] = max(best.get(i, -2.0), s)
+    want = sorted(best, key=lambda i: (-round(best[i], 6), i))[:k]
+    assert moved in want
+
+    qs = [(0, list(q["vector"]))]
+    qdf = spark.createDataFrame(qs, "qid bigint, qvec array<float>")
+    for index in (idx.add(upsert), IvfIndex.load(spark, path)):
+        assert index.index_df.filter(F.col("id") == moved).count() == 2
+        for res in (
+            index.search(qs, k=k, n_probes=n_cells),
+            index.search_df(qdf, k=k, n_probes=n_cells),
+        ):
+            got = res.orderBy(F.col("score").desc(), "id").collect()
+            assert [r["id"] for r in got] == want
+            score = {r["id"]: r["score"] for r in got}[moved]
+            assert score == pytest.approx(1.0, abs=1e-6)
 
 
 def test_forest_rerank_one_shuffle_bit_equal_to_dedup_first(spark, emb):
