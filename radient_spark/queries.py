@@ -2970,29 +2970,34 @@ def _ann_lattice_sql(
     spill cuts, <=hi / >=lo child assignment), then descends each query
     (right iff proj > mid), dedups candidates across trees, and applies
     the rounded-cosine top-k contract."""
+    # asg{L+1} reads pj{L} and ct{L} twice, and w{L} joins m{L} to itself;
+    # without MATERIALIZED DuckDB inlines the CTEs, the plan grows
+    # exponentially with levels and the oracle runs out of memory. Every
+    # window orders by a unique key, so materializing changes how each
+    # CTE is evaluated, not what it returns
     parts = [
-        f"""pts AS (
+        f"""pts AS MATERIALIZED (
   SELECT vec_id, u.i AS dim,
     CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000, 0) AS BIGINT)
       + 4000000 AS v
   FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)
-), asg0 AS (
+), asg0 AS MATERIALIZED (
   SELECT vec_id, t.t::INT AS tree, 0 AS leaf
   FROM embeddings, unnest(range(0, {n_trees})) AS t(t)
 )"""
     ]
     for L in range(levels):
-        parts.append(f"""sd{L} AS (
+        parts.append(f"""sd{L} AS MATERIALIZED (
   SELECT tree, leaf, vec_id,
     row_number() OVER (PARTITION BY tree, leaf
       ORDER BY ('0x' || substring(md5(concat_ws('_', {seed}, {L}, tree, leaf, vec_id)), 1, 8))::BIGINT,
                vec_id) - 1 AS r
   FROM asg{L}
   QUALIFY r < 2
-), sc{L} AS (
+), sc{L} AS MATERIALIZED (
   SELECT s.tree, s.leaf, s.r, p.dim, p.v AS cv
   FROM sd{L} s JOIN pts p USING (vec_id)
-), nr{L} AS (
+), nr{L} AS MATERIALIZED (
   SELECT a.vec_id, a.tree, a.leaf, sc.r,
     SUM((p.v - sc.cv) * (p.v - sc.cv)) AS d
   FROM asg{L} a JOIN pts p USING (vec_id)
@@ -3000,7 +3005,7 @@ def _ann_lattice_sql(
   GROUP BY a.vec_id, a.tree, a.leaf, sc.r
   QUALIFY row_number() OVER (
     PARTITION BY a.vec_id, a.tree, a.leaf ORDER BY d, sc.r) = 1
-), m{L} AS (
+), m{L} AS MATERIALIZED (
   SELECT sc.tree, sc.leaf, sc.r, sc.dim, COALESCE(mm.mv, sc.cv) AS mv
   FROM sc{L} sc LEFT JOIN (
     SELECT n.tree, n.leaf, n.r, p.dim, SUM(p.v) // COUNT(*) AS mv
@@ -3008,17 +3013,17 @@ def _ann_lattice_sql(
     GROUP BY n.tree, n.leaf, n.r, p.dim
   ) mm ON sc.tree = mm.tree AND sc.leaf = mm.leaf
       AND sc.r = mm.r AND sc.dim = mm.dim
-), w{L} AS (
+), w{L} AS MATERIALIZED (
   SELECT m1.tree, m1.leaf, m1.dim, m1.mv - m0.mv AS wv
   FROM m{L} m1 JOIN m{L} m0
     ON m1.tree = m0.tree AND m1.leaf = m0.leaf AND m1.dim = m0.dim
   WHERE m1.r = 1 AND m0.r = 0
-), pj{L} AS (
+), pj{L} AS MATERIALIZED (
   SELECT a.vec_id, a.tree, a.leaf, SUM(p.v * w.wv) AS pr
   FROM asg{L} a JOIN pts p USING (vec_id)
   JOIN w{L} w ON w.tree = a.tree AND w.leaf = a.leaf AND w.dim = p.dim
   GROUP BY a.vec_id, a.tree, a.leaf
-), ct{L} AS (
+), ct{L} AS MATERIALIZED (
   SELECT tree, leaf,
     MAX(CASE WHEN rn = lo_r THEN pr END) AS lo,
     MAX(CASE WHEN rn = mid_r THEN pr END) AS mid,
@@ -3032,7 +3037,7 @@ def _ann_lattice_sql(
             (COUNT(*) OVER (PARTITION BY tree, leaf) * {500 + spill_pm} + 999) // 1000) AS hi_r
     FROM pj{L}
   ) GROUP BY tree, leaf
-), asg{L + 1} AS (
+), asg{L + 1} AS MATERIALIZED (
   SELECT p.vec_id, p.tree, p.leaf * 2 AS leaf
   FROM pj{L} p JOIN ct{L} c ON p.tree = c.tree AND p.leaf = c.leaf
   WHERE p.pr <= c.hi
@@ -3041,25 +3046,25 @@ def _ann_lattice_sql(
   FROM pj{L} p JOIN ct{L} c ON p.tree = c.tree AND p.leaf = c.leaf
   WHERE p.pr >= c.lo
 )""")
-    parts.append(f"""q AS (
+    parts.append(f"""q AS MATERIALIZED (
   SELECT vec_id AS qid, embedding AS qvec
   FROM embeddings ORDER BY vec_id LIMIT {nq}
-), qpts AS (
+), qpts AS MATERIALIZED (
   SELECT qid, u.i AS dim,
     CAST(round(CAST(qvec[u.i] AS DOUBLE) * 1000000, 0) AS BIGINT)
       + 4000000 AS v
   FROM q, unnest(range(1, len(qvec) + 1)) AS u(i)
-), qn0 AS (
+), qn0 AS MATERIALIZED (
   SELECT qid, t.t::INT AS tree, 0 AS node
   FROM q, unnest(range(0, {n_trees})) AS t(t)
 )""")
     for L in range(levels):
-        parts.append(f"""qp{L} AS (
+        parts.append(f"""qp{L} AS MATERIALIZED (
   SELECT a.qid, a.tree, a.node, SUM(p.v * w.wv) AS pr
   FROM qn{L} a JOIN qpts p USING (qid)
   JOIN w{L} w ON w.tree = a.tree AND w.leaf = a.node AND w.dim = p.dim
   GROUP BY a.qid, a.tree, a.node
-), qn{L + 1} AS (
+), qn{L + 1} AS MATERIALIZED (
   SELECT p.qid, p.tree,
     p.node * 2 + CASE WHEN p.pr > c.mid THEN 1 ELSE 0 END AS node
   FROM qp{L} p JOIN ct{L} c ON p.tree = c.tree AND c.leaf = p.node
@@ -3070,11 +3075,11 @@ def _ann_lattice_sql(
         " * sqrt(list_dot_product(q.qvec::DOUBLE[], q.qvec::DOUBLE[]))), 6)"
     )
     return ("WITH " + ",\n".join(parts) + f""",
-cand AS (
+cand AS MATERIALIZED (
   SELECT DISTINCT qn.qid, a.vec_id AS id
   FROM qn{levels} qn JOIN asg{levels} a
     ON a.tree = qn.tree AND a.leaf = qn.node
-), scored AS (
+), scored AS MATERIALIZED (
   SELECT c.qid, c.id, {sim} AS score
   FROM cand c
   JOIN embeddings e ON e.vec_id = c.id
