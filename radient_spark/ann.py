@@ -59,11 +59,9 @@ MAX_LEAF_SIZE = 200  # gann.py:15
 # round-trip dominates: 64-way stages measured 5.0 s vs 3.6 s at the
 # rows-derived width on the sf0.1 forest), mid-size builds fill 2x the
 # cores, and big builds are bytes-driven so a pandas GEMM task never
-# holds more than ~a scan split of vectors. Both knobs env-overridable.
-_ANN_MAX_SPLIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_ANN_MAX_SPLIT_BYTES", 128 << 20)
-)
-_ANN_FILL_ROWS = int(os.environ.get("SPARK_GRAFT_ANN_FILL_ROWS", 1024))
+# holds more than ~a scan split of vectors.
+_ANN_MAX_SPLIT_BYTES = 128 << 20
+_ANN_FILL_ROWS = 1024
 
 
 def _build_width(
@@ -708,10 +706,18 @@ class IvfIndex:
         partition key first so each cell directory gets one file, not
         one per (task x cell) — see AnnIndex.save (guide §6). The JSON
         also records the index DDL, for `load`'s typed read. Overwriting
-        cells/ also drops any segments a previous index left there."""
+        cells/ also drops any segments a previous index left there.
+        Once the new cells have committed, the previous index's
+        `tombstones/` sidecar is removed too: its ids named rows of the
+        old index and would hide the new index's rows with those ids. A
+        crash between the two steps leaves the new cells under the old
+        tombstones, so those ids stay hidden until the next `save`."""
+        import shutil
+
         self.index_df.repartition("cell_id").write.mode(
             "overwrite"
         ).partitionBy("cell_id").parquet(f"{path}/cells")
+        shutil.rmtree(f"{path}/tombstones", ignore_errors=True)
         with open(f"{path}/centroids.json", "w") as f:
             json.dump(
                 {

@@ -76,12 +76,10 @@ TIMESTAMP_NANOS_COLS = {
 # Predicate pushdown and column pruning pass through the repartition
 # (verified in the plan: PushedFilters/ReadSchema unchanged at the
 # scan node).
-# Both bounds are env-overridable so a cluster deployment can tune (or
-# disable, MIN=1<<60) them without a code change; the defaults are the
-# local-mode values measured in scripts/overhead_probe.json + the A/B
-# sweeps in OPTIMIZATION_r12.md.
-_WIDEN_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES", 512 << 10))
-_WIDEN_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_WIDEN_MAX_BYTES", 256 << 20))
+# The bounds are the local-mode values measured in
+# scripts/overhead_probe.json + the A/B sweeps in OPTIMIZATION_r12.md.
+_WIDEN_MIN_BYTES = 512 << 10
+_WIDEN_MAX_BYTES = 256 << 20
 
 # (abs path, signature) -> inferred StructType. Metadata only; shared
 # across sessions (a StructType is engine-independent).

@@ -1,33 +1,54 @@
-"""Graph centrality over edge DataFrames: PageRank.
+"""Graph operators over edge DataFrames: PageRank (float, integer and
+personalized), triangles and local clustering, star connected
+components, k-core, label propagation, WL colors, BFS and HyperBall.
 
 Extends the engine's graph family (FastRP embeddings,
-operators/vectorize.py; reference graph vectorizer
-/root/reference/radient/tasks/vectorizers/graph/fastrp.py:17-53) with
-the canonical link-analysis primitive — at corpus scale PageRank is the
-standard importance prior for web-crawl curation (rank-weighted
-sampling of crawled documents by domain/link graph).
+operators/vectorize.py; the reference graph vectorizer is radient's
+tasks/vectorizers/graph/fastrp.py) with the canonical link-analysis
+primitive — at corpus scale PageRank is the standard importance prior
+for web-crawl curation (rank-weighted sampling of crawled documents by
+domain/link graph).
 
-Spark-first shape per iteration: contributions = one join of the edge
-list with the current rank vector on src (sort-merge, both sides
-pre-shuffled on the same key across iterations), one groupBy(dst) sum
-(map-side combined), one left join back onto the node set. No driver
-state beyond the node count; no collect. Lineage is truncated per round
-through radient_spark.lineage.truncate (localCheckpoint by default,
-reliable checkpoint under SPARK_GRAFT_CHECKPOINT_DIR), the same
-discipline as connected components (operators/dedup.py). The lazy
-per-round truncation defers all materialization to the sweep's single
-release job, which assumes the SMALL FIXED round counts the registry
-uses (2-6): physical lineage depth grows with `rounds`, so an executor
-loss mid-job recomputes from round 0 — for large sweeps set the
-reliable checkpoint dir (bounded recompute) instead.
+Each kernel exists once and the operators share it:
+  * `_roster` — the adjacency-roster aggregation, with the optional
+    hub split (`_roster_salts`, resolved once per operator call);
+  * `_undirected_roster` — the persisted, eagerly built roster of the
+    undirected graph behind label propagation, WL, BFS and HyperBall;
+  * `_power_iteration` — the one PageRank loop, given the initial
+    rank, the per-source contribution and the update expression;
+  * `_hyperball_balls` — the HyperBall register sweep and its per-node
+    ball estimate, for `hyperball` and `hyperball_harmonic`;
+  * `_undirected_edges` and `_oriented_triangles` — the distinct
+    (least, greatest) edge list, and the degree-oriented wedge join of
+    `triangle_count` and `local_clustering`.
 
-Two arithmetic modes:
+Spark-first shape per PageRank round: contributions = one join of the
+persisted adjacency roster with the current rank vector on src, one
+groupBy(dst) sum (map-side combined), one left join back onto the node
+set. No driver state beyond the node count; no collect.
+
+Lineage policy: every truncation goes through
+radient_spark.lineage.truncate (localCheckpoint by default, reliable
+checkpoint under SPARK_GRAFT_CHECKPOINT_DIR). The fixed-round sweeps
+truncate LAZILY, so each sweep materializes in its single `_release`
+job: label propagation, WL and HyperBall every round, and all three
+PageRanks every `checkpoint_every` rounds (4; only `pagerank` takes it
+as an argument). This assumes the SMALL FIXED round counts the
+registry uses (2-6): physical lineage depth grows with the rounds
+between truncations, so an executor loss mid-job recomputes from the
+last one — for large sweeps set the reliable checkpoint dir (bounded
+recompute) instead. The operators that stop early (star components,
+k-core, BFS) truncate every round and run one job per round that
+decides whether to stop.
+
+Two PageRank arithmetic modes:
   * `pagerank` — float64, the production operator (validated against a
     dense numpy power-iteration in tests).
-  * `pagerank_integer` — ranks in integer micro-units with floor
-    division, bit-exact in any summation order and expressible in ANSI
-    SQL, so the registry query has a DuckDB value oracle (same trick as
-    the integer-lattice k-means oracle, operators/cluster.py).
+  * `pagerank_integer` and `personalized_pagerank_integer` — ranks in
+    integer micro-units with floor division, bit-exact in any summation
+    order and expressible in ANSI SQL, so the registry queries have
+    DuckDB value oracles (same trick as the integer-lattice k-means
+    oracle, operators/cluster.py).
 """
 
 from __future__ import annotations
@@ -52,13 +73,17 @@ def _roster_salts() -> int:
     deterministic function of the neighbor value so set-dedup stays
     global. Costs one extra setup exchange (re-partition by the join
     key so rounds stay exchange-free) — a deployment knob, not a local
-    default."""
+    default. A value that is not an integer raises ValueError; values
+    below 1 mean 1."""
     import os
 
+    raw = os.environ.get("SPARK_GRAFT_ROSTER_SALTS", "1")
     try:
-        s = int(os.environ.get("SPARK_GRAFT_ROSTER_SALTS", "1"))
+        s = int(raw)
     except ValueError:
-        s = 1
+        raise ValueError(
+            f"SPARK_GRAFT_ROSTER_SALTS must be an integer, got {raw!r}"
+        ) from None
     return max(1, s)
 
 
@@ -125,6 +150,146 @@ def _release(result: DataFrame, *cached: DataFrame) -> DataFrame:
     return out
 
 
+def _undirected_roster(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    key: str = "v",
+    val: str = "u",
+    out: str = "__us",
+) -> tuple[DataFrame, int]:
+    """The adjacency roster of the undirected graph, built once per
+    operator call: both directions of every edge as (u, v), self-loops
+    dropped, rostered by collect_set on ``key`` — one exchange dedups
+    the edges and hash-partitions the rosters by the per-round join
+    key, and persist (not localCheckpoint) keeps that partitioning
+    visible to the planner, so every round shuffles only node-sized
+    state. Built eagerly (one count job) before the rounds. Returns the
+    roster and the salt count it was built with (see _roster)."""
+    salts = _roster_salts()
+    adj = _roster(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .unionByName(
+            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        )
+        .filter(F.col("u") != F.col("v")),
+        key, val, F.collect_set, out, salts,
+    ).persist()
+    adj.count()  # eager: build the roster once before the rounds
+    return adj, salts
+
+
+def _undirected_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Distinct undirected edges (a, b) with a < b: self-loops dropped,
+    each edge once whatever its direction or multiplicity."""
+    return (
+        pairs.select(F.col(a).alias("a"), F.col(b).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .distinct()
+    )
+
+
+def _power_iteration(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    iters: int,
+    rank_col: str,
+    roster_agg,
+    step,
+    checkpoint_every: int = 4,
+    zero=None,
+) -> DataFrame:
+    """The power-iteration loop of the three PageRanks.
+
+    Scale shape (optimization r12, guide §2.4/§3.1): the edge list
+    collapses ONCE into a persisted (src, [dst...]) adjacency roster
+    (``roster_agg``: collect_list keeps edge multiplicity, collect_set
+    drops duplicate edges in the same exchange), partitioned by the
+    per-round join key and with the out-degree free as size(roster), so
+    every round shuffles only the node-sized rank state into the roster
+    join and explodes the destinations after it. (Null dst endpoints
+    are not propagated as rank sinks; null-keyed edges never matched
+    the contribution join anyway.) The static out-degree rides INSIDE
+    the iterated state, so the loop holds one roster join and one
+    node-sized fold per round; degree-0 nodes are filtered out of the
+    contributions.
+
+    ``step(n)`` returns the (initial ``__r``, per-source contribution
+    ``__c`` from ``__r`` and ``__deg``, updated ``__r`` from the summed
+    contributions ``__s``) columns. ``n`` is the node count, counted by
+    one job only when ``zero`` — the rank literal of the empty result —
+    is given; with no nodes that result is returned at once and the
+    entry caches released outright (no localCheckpoint — recomputing an
+    empty frame is free, and a checkpoint would itself pin an RDD;
+    round-9 ADVICE). Without ``zero``, ``step`` gets None and no count
+    job runs. Lineage is truncated lazily every ``checkpoint_every``
+    rounds."""
+    salts = _roster_salts()
+    adj = _roster(
+        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
+        "__src", "__dst", roster_agg, "__ds", salts,
+    ).persist()
+    nodes = (
+        adj.select(F.col("__src").alias("node"))
+        .unionByName(adj.select(F.explode("__ds").alias("node")))
+        .distinct()
+        .persist()
+    )
+    owned = [adj, nodes]
+    n = None
+    if zero is not None:
+        n = nodes.count()
+        if n == 0:
+            for c in owned:
+                c.unpersist()
+            return nodes.withColumn(rank_col, zero)
+    init, contrib, update = step(n)
+    nd = (
+        nodes.join(
+            _roster_sizes(adj, "__src", "__ds", "node", "__deg", salts),
+            "node",
+            "left",
+        )
+        .select("node", F.coalesce("__deg", F.lit(0)).alias("__deg"))
+        .persist()
+    )
+    owned.append(nd)
+    ranks = nd.withColumn("__r", init).cache()
+    for i in range(iters):
+        per_src = ranks.filter(F.col("__deg") > 0).select(
+            F.col("node").alias("__src"), contrib.alias("__c")
+        )
+        summed = (
+            adj.join(per_src, "__src")
+            .select(F.explode("__ds").alias("node"), "__c")
+            .groupBy("node")
+            .agg(F.sum("__c").alias("__s"))
+        )
+        new = nd.join(summed, "node", "left").select(
+            "node", "__deg", update.alias("__r")
+        )
+        if (i + 1) % checkpoint_every == 0:
+            new = new.transform(truncate)
+        old = ranks
+        ranks = new.cache()
+        old.unpersist()
+    return _release(
+        ranks.select("node", F.col("__r").alias(rank_col)), ranks, *owned
+    )
+
+
+def _integer_step(init, restart, damping_pct: int):
+    """(initial rank, contribution, update) of the integer PageRanks:
+    floor division throughout, so every sum is order-exact."""
+    return (
+        init,
+        F.expr("__r div __deg"),
+        restart + F.expr(f"({damping_pct} * coalesce(__s, 0L)) div 100"),
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -139,79 +304,21 @@ def pagerank(
     Dangling-node policy: nodes without out-edges simply leak their
     mass (ranks then sum to < 1) — the common large-scale simplification;
     add reverse edges upstream for an undirected reading. Returns
-    (node, rank).
-
-    Scale shape (optimization r12, guide §2.4/§3.1): the edge list
-    collapses ONCE into a persisted (src, [dst...]) adjacency roster —
-    multiplicity-preserving collect_list, partitioned by the per-round
-    join key and with the out-degree free as size(roster) — so every
-    power-iteration round shuffles only the node-sized rank state into
-    the roster join and explodes the destinations after it. (Null dst
-    endpoints are not propagated as rank sinks; null-keyed edges never
-    matched the contribution join anyway.)
+    (node, rank). Iteration shape: _power_iteration, over a
+    multiplicity-preserving collect_list roster.
     """
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        "__src", "__dst", F.collect_list, "__ds", salts,
-    ).persist()
-    nodes = (
-        adj.select(F.col("__src").alias("node"))
-        .unionByName(adj.select(F.explode("__ds").alias("node")))
-        .distinct()
-        .persist()
-    )
-    owned = [adj, nodes]
-    n = nodes.count()
-    if n == 0:
-        # Nothing to iterate: release entry caches outright (no
-        # localCheckpoint — recomputing an empty frame is free, and a
-        # checkpoint would itself pin an RDD; round-9 ADVICE).
-        for c in owned:
-            c.unpersist()
-        return nodes.withColumn(rank_col, F.lit(0.0))
-    # Carry the (static) out-degree INSIDE the iterated rank state:
-    # the rank⋈degree join then disappears from the loop entirely — a
-    # filter+project on the cached state replaces it, leaving exactly
-    # one roster join and one node-sized fold per round. Values are
-    # identical: degree-0 nodes contributed nothing through the old
-    # inner join and are now filtered explicitly.
-    nd = (
-        nodes.join(
-            _roster_sizes(adj, "__src", "__ds", "node", "__deg", salts),
-            "node",
-            "left",
+
+    def step(n):
+        return (
+            F.lit(1.0 / n),
+            F.col("__r") / F.col("__deg"),
+            F.lit((1.0 - damping) / n)
+            + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0)),
         )
-        .select("node", F.coalesce("__deg", F.lit(0)).alias("__deg"))
-        .persist()
-    )
-    owned.append(nd)
-    ranks = nd.withColumn("__r", F.lit(1.0 / n)).cache()
-    base = (1.0 - damping) / n
-    for i in range(iters):
-        per_src = ranks.filter(F.col("__deg") > 0).select(
-            F.col("node").alias("__src"),
-            (F.col("__r") / F.col("__deg")).alias("__c"),
-        )
-        contrib = adj.join(per_src, "__src").select(
-            F.explode("__ds").alias("node"), "__c"
-        )
-        summed = contrib.groupBy("node").agg(F.sum("__c").alias("__s"))
-        new = nd.join(summed, "node", "left").select(
-            "node",
-            "__deg",
-            (
-                F.lit(base) + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0))
-            ).alias("__r"),
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new = new.transform(truncate)
-        old = ranks
-        ranks = new.cache()
-        old.unpersist()
-    return _release(
-        ranks.select("node", F.col("__r").alias(rank_col)),
-        ranks, *owned,
+
+    return _power_iteration(
+        edges, src, dst, iters, rank_col, F.collect_list, step,
+        checkpoint_every, zero=F.lit(0.0),
     )
 
 
@@ -232,9 +339,9 @@ def pagerank_integer(
     truncation loses < iters * n / units of total mass; at units=1e12
     that is measurement noise, and determinism is the point.
 
-    Adjacency-roster iteration shape — see pagerank (optimization r12);
-    integer arithmetic is order-exact, so the roster explode cannot
-    change a single bit of the result.
+    Iteration shape: _power_iteration (see pagerank); integer
+    arithmetic is order-exact, so the roster explode cannot change a
+    single bit of the result.
 
     ``dedup_edges=True`` folds a caller's `.distinct()` INTO the roster
     aggregation (collect_set instead of collect_list): one exchange
@@ -243,88 +350,37 @@ def pagerank_integer(
     results whenever the caller would have deduped anyway (set roster
     == list roster over distinct edges, and contribution sums are
     order-exact integers); leave False to preserve edge multiplicity."""
-    roster_agg = F.collect_set if dedup_edges else F.collect_list
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        "__src", "__dst", roster_agg, "__ds", salts,
-    ).persist()
-    nodes = (
-        adj.select(F.col("__src").alias("node"))
-        .unionByName(adj.select(F.explode("__ds").alias("node")))
-        .distinct()
-        .persist()
-    )
-    owned = [adj, nodes]
-    n = nodes.count()
-    if n == 0:
-        for c in owned:  # see pagerank: plain unpersist, no checkpoint
-            c.unpersist()
-        return nodes.withColumn(rank_col, F.lit(0).cast("long"))
-    # degree carried inside the iterated state (see pagerank): zero
-    # node-sized joins on the contribution side, one roster join + one
-    # node fold per round; __r div __deg per source is unchanged
-    nd = (
-        nodes.join(
-            _roster_sizes(adj, "__src", "__ds", "node", "__deg", salts),
-            "node",
-            "left",
+
+    def step(n):
+        base = (units * (100 - damping_pct) // 100) // n
+        return _integer_step(
+            F.lit(int(units // n)).cast("long"),
+            F.lit(int(base)).cast("long"),
+            damping_pct,
         )
-        .select("node", F.coalesce("__deg", F.lit(0)).alias("__deg"))
-        .persist()
-    )
-    owned.append(nd)
-    ranks = nd.withColumn("__r", F.lit(int(units // n)).cast("long")).cache()
-    base = (units * (100 - damping_pct) // 100) // n
-    for _ in range(iters):
-        per_src = ranks.filter(F.col("__deg") > 0).select(
-            F.col("node").alias("__src"),
-            F.expr("__r div __deg").alias("__c"),
-        )
-        contrib = adj.join(per_src, "__src").select(
-            F.explode("__ds").alias("node"), "__c"
-        )
-        summed = contrib.groupBy("node").agg(F.sum("__c").alias("__s"))
-        new = nd.join(summed, "node", "left").select(
-            "node",
-            "__deg",
-            (
-                F.lit(int(base)).cast("long")
-                + F.expr(
-                    f"({damping_pct} * coalesce(__s, 0L)) div 100"
-                )
-            ).alias("__r"),
-        )
-        old = ranks
-        ranks = new.cache()
-        old.unpersist()
-    return _release(
-        ranks.select("node", F.col("__r").cast("long").alias(rank_col)),
-        ranks, *owned,
+
+    return _power_iteration(
+        edges, src, dst, iters, rank_col,
+        F.collect_set if dedup_edges else F.collect_list, step,
+        zero=F.lit(0).cast("long"),
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Global triangle count by degree-ordered edge orientation (the
-    standard bounded-fanout formulation): orient every undirected edge
-    from its lower-(degree, id) endpoint to the higher one, join
-    oriented wedges a->b, b->c, and close them against oriented a->c.
-    Orientation bounds every node's out-degree by O(sqrt(|E|)) on any
-    graph, so the wedge join never explodes on hubs — the reason this
-    beats the naive three-way self-join at scale.
+def _oriented_triangles(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Degree-ordered triangle enumeration (the standard bounded-fanout
+    formulation): orient every undirected edge from its lower-(degree,
+    id) endpoint to the higher one, join oriented wedges a->b, b->c,
+    and close them against oriented a->c. Orientation bounds every
+    node's out-degree by O(sqrt(|E|)) on any graph, so the wedge join
+    never explodes on hubs — the reason this beats the naive three-way
+    self-join at scale. Each triangle is found exactly once.
 
-    Returns a 1-row DataFrame (n_nodes, n_edges, n_triangles).
+    Returns (und, deg, tris): the distinct undirected edges (a, b), the
+    degrees (n, d), and one (x, z, y) row per triangle.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
+    und = _undirected_edges(edges, src, dst)
     deg = (
         und.select(F.col("a").alias("n"))
         .union(und.select(F.col("b").alias("n")))
@@ -345,14 +401,25 @@ def triangle_count(
     e1 = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = oriented.select(F.col("u").alias("y"), F.col("v").alias("z"))
     e3 = oriented.select(F.col("u").alias("x"), F.col("v").alias("z"))
-    wedges = e1.join(e2, "y")
-    tris = wedges.join(e3, ["x", "z"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
+    return und, deg, e1.join(e2, "y").join(e3, ["x", "z"])
+
+
+def triangle_count(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Global triangle count by degree-ordered edge orientation
+    (_oriented_triangles): duplicate, reversed and self-loop edges do
+    not count.
+
+    Returns a 1-row DataFrame (n_nodes, n_edges, n_triangles).
+    """
+    und, deg, tris = _oriented_triangles(edges, src, dst)
     stats = und.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
         deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     )
-    return stats.crossJoin(tris).select("n_nodes", "n_edges", "n_triangles")
+    return stats.crossJoin(
+        tris.agg(F.count(F.lit(1)).alias("n_triangles"))
+    ).select("n_nodes", "n_edges", "n_triangles")
 
 
 def connected_components_star(
@@ -389,13 +456,7 @@ def connected_components_star(
     # emptiness probe, round 1, and the final node-universe scan would
     # otherwise each recompute it (an LSH or edit-distance candidate
     # generator is far costlier than this checkpoint)
-    e = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .transform(lambda d: truncate(d, eager=True))
-    )
+    e = truncate(_undirected_edges(pairs, id_a, id_b), eager=True)
     if e.isEmpty():
         # no non-self edges: every node (incl. self-pair-only ones) is
         # its own component — the connected_duplicate_groups contract;
@@ -416,15 +477,12 @@ def connected_components_star(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
         w = Window.partitionBy("a")
-        ls = (
+        ls = _undirected_edges(
             bidir.withColumn(
                 "m", F.least(F.col("a"), F.min("b").over(w))
-            )
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("m").alias("a"), F.col("b"))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            .distinct()
+            ).filter(F.col("b") > F.col("a")),
+            "m",
+            "b",
         )
         # small-star: orient big -> small, smaller neighbors AND self -> m
         ori = ls.select(F.col("b").alias("u"), F.col("a").alias("n"))
@@ -507,38 +565,7 @@ def local_clustering(
     node with degree >= 2; the coefficient is one IEEE division of
     exact integers rounded to 6 decimals.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .union(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    with_deg = (
-        und.join(
-            deg.withColumnRenamed("n", "a").withColumnRenamed("d", "da"), "a"
-        ).join(
-            deg.withColumnRenamed("n", "b").withColumnRenamed("d", "db"), "b"
-        )
-    )
-    lower_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = with_deg.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    )
-    e1 = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    e2 = oriented.select(F.col("u").alias("y"), F.col("v").alias("z"))
-    e3 = oriented.select(F.col("u").alias("x"), F.col("v").alias("z"))
-    tris = e1.join(e2, "y").join(e3, ["x", "z"])
+    _, deg, tris = _oriented_triangles(edges, src, dst)
     # ONE pass over the triangle set: exploding the corner array credits
     # all three nodes without re-executing the wedge join per corner
     # (a 3-way union of selects would run the join three times)
@@ -604,14 +631,7 @@ def kcore(
     # checkpoint here is followed immediately by a count() that scans
     # all partitions, so the count job materializes the checkpoint —
     # one job per round instead of two (materialize + count).
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .transform(truncate)
-    )
-    cur = und
+    cur = _undirected_edges(edges, src, dst).transform(truncate)
     n_edges = cur.count()
     for _ in range(rounds):
         deg = (
@@ -673,12 +693,9 @@ def label_propagation(
     components, finer than the whole graph.
 
     Scale shape (optimization r12, guide §2.4/§3.1): the graph lives as
-    a PERSISTED adjacency roster — one groupBy(v).collect_set(u) folds
-    the bidirectional dedup into the single exchange that also hash-
-    partitions the rosters by the per-round join key, and persist (not
-    localCheckpoint) keeps that partitioning visible to the planner, so
-    every round's roster-label join shuffles ONLY the node-sized label
-    state. The per-round mode-argmax is ONE aggregation —
+    a persisted adjacency roster (_undirected_roster), so every round's
+    roster-label join shuffles ONLY the node-sized label state. The
+    per-round mode-argmax is ONE aggregation —
     mode(lbl, deterministic=true) is exactly "most frequent, ties to
     the smaller label" with map-side partial maps — where the old shape
     paid a (node, label) count exchange plus a per-node max exchange.
@@ -689,16 +706,7 @@ def label_propagation(
 
     Returns (node, community).
     """
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us", salts,
-    ).persist()
-    adj.count()  # eager: build the roster once before the sweeps
+    adj, salts = _undirected_roster(edges, src, dst)
     labels = _roster_keys(adj, "v", salts).select(
         F.col("v").alias("node")
     ).withColumn("lbl", F.col("node"))
@@ -742,26 +750,16 @@ def wl_colors(
     identically in Spark and ANSI/DuckDB SQL, so the registry oracle
     replays the refinement exactly. Scale shape (optimization r12,
     guide §2.4/§3.1): the graph lives as a persisted adjacency roster
-    partitioned by the per-round join key (one groupBy(v).collect_set —
-    dedup, degree AND rosters from a single exchange; persist keeps the
-    partitioning visible, so each round shuffles only the node-sized
-    color state), and the own-color attach rides the SAME aggregation
+    (_undirected_roster: dedup, degree AND rosters from a single
+    exchange, so each round shuffles only the node-sized color state),
+    and the own-color attach rides the SAME aggregation
     as the neighbor multiset via a self-row union instead of a second
     node join. The multiset sort is per-node, bounded by degree — no
     global sort; lineage truncated per round.
 
     Returns (node, wl_color).
     """
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us", salts,
-    ).persist()
-    adj.count()  # eager: build the roster once before the rounds
+    adj, salts = _undirected_roster(edges, src, dst)
     colors = _roster_sizes(adj, "v", "__us", "node", "__d", salts).select(
         "node", F.col("__d").cast("string").alias("color")
     )
@@ -823,26 +821,16 @@ def bfs_layers(
     blast-zones, and crawl frontier analysis.
 
     Spark-first shape (optimization r12, guide §2.4/§3.1): the graph
-    lives as a persisted adjacency roster partitioned by the per-level
-    join key (one groupBy(u).collect_set(v) — dedup and rosters from a
-    single exchange; persist keeps the partitioning visible), so every
-    level's frontier-roster join shuffles only the node-sized frontier.
+    lives as a persisted adjacency roster keyed on u (_undirected_roster),
+    so every level's frontier-roster join shuffles only the node-sized
+    frontier.
     Per level: that join, one distinct over the exploded neighbors, one
     anti-join against the visited set; lineage truncated per level.
     Level count is the constant ``max_depth`` — each level is one
     synchronized superstep, the Pregel discipline; no per-node
     recursion, no driver state.
     """
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .filter(F.col("u") != F.col("v")),
-        "u", "v", F.collect_set, "__vs", salts,
-    ).persist()
-    adj.count()  # eager: build the roster once before the levels
+    adj, _ = _undirected_roster(edges, src, dst, "u", "v", "__vs")
     frontier = seeds.select(F.col(node_col).alias("n")).distinct()
     visited = truncate(
         frontier.withColumn("depth", F.lit(0)), eager=True
@@ -877,53 +865,32 @@ def bfs_layers(
     return out
 
 
-def hyperball(
-    edges: DataFrame,
-    rounds: int = 3,
-    p: int = 7,
-    src: str = "src",
-    dst: str = "dst",
-    decimals: int = 4,
-) -> DataFrame:
-    """HyperBall (Boldi & Vigna 2011): estimate the neighborhood
-    function N(t) = number of (u, v) pairs with dist(u, v) <= t by
-    giving every node an HLL counter of its ball and iterating
-    register-wise MAX over neighbors — the sketch that made
-    average-distance / effective-diameter computation feasible on
-    billion-node graphs.
+def _hyperball_balls(
+    edges: DataFrame, src: str, dst: str, rounds: int, p: int, decimals: int
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The HyperBall register sweep shared by hyperball and
+    hyperball_harmonic: every node starts with an HLL counter holding
+    itself (md5-derived register index and rho), and each round folds
+    in the neighbors' counters by register-wise MAX.
 
     Scale shape: the whole state is the (node, idx, rho) register
     table — at most nodes x 2^p rows, INDEPENDENT of ball sizes (the
-    quantity being counted); each round is one edge-register join +
-    one (node, idx) max, lineage truncated per round. Per-node
-    estimates use the same register/estimate arithmetic as
-    operators/sketch.py (one ln, rounded to ``decimals``), and N(t)
-    sums them through DECIMAL so aggregation order cannot change the
-    hash.
+    quantity being counted); each round is one roster-register join +
+    one (node, idx) max, lineage truncated per round. The roster
+    (_undirected_roster) makes the join input one row per node instead
+    of one per (edge, register), so each round shuffles only the
+    register state. The per-node estimate uses the same register/
+    estimate arithmetic as operators/sketch.py (one ln).
 
-    Returns one row per t in 0..rounds:
-    (t, n_nodes, n_reachable_pairs_est).
+    Returns (adj, balls): the roster, for the caller to release, and
+    balls[t] for t in 0..rounds as (node, __e), the estimate of node's
+    ball size after t rounds rounded to ``decimals`` as decimal(18,4).
     """
     from radient_spark.operators.sketch import hll_alpha
 
     m = 1 << p
     numer = hll_alpha(m) * m * m * float(1 << 50)
-    # Adjacency-roster form (optimization r12, guide §2.4): one
-    # groupBy(v).collect_set(u) folds the bidirectional dedup into the
-    # exchange that partitions the rosters by the per-round join key;
-    # persist keeps that partitioning visible, so each round's
-    # roster-register join shuffles only the register state — and the
-    # join input is one row per node instead of one per (edge, register).
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us", salts,
-    ).persist()
-    adj.count()  # eager: build the roster once before the rounds
+    adj, salts = _undirected_roster(edges, src, dst)
     h = F.conv(
         F.substring(F.md5(F.col("node").cast("string")), 1, 15), 16, 10
     ).cast("long")
@@ -941,12 +908,12 @@ def hyperball(
         )
         # lazy (as is every per-round checkpoint below): register
         # contents are deterministic (md5-derived rho, MAX-folded), so
-        # the whole sweep materializes in the single _release job at
-        # the end — one job instead of one per round (guide §1.2)
+        # the whole sweep materializes in the caller's single _release
+        # job — one job instead of one per round (guide §1.2)
         .transform(truncate)
     )
 
-    def _n_t(r: DataFrame, t: int) -> DataFrame:
+    def ball(r: DataFrame) -> DataFrame:
         folded = r.groupBy("node").agg(
             F.count(F.lit(1)).alias("n_set"),
             F.sum(F.pow(F.lit(2.0), 50 - F.col("rho")).cast("long")).alias(
@@ -960,21 +927,12 @@ def hyperball(
             (e_raw <= 2.5 * m) & (zeros > 0),
             F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double")),
         ).otherwise(e_raw)
-        return (
-            folded.select(
-                F.round(est, decimals).cast("decimal(18,4)").alias("__e")
-            )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_nodes"),
-                F.sum("__e").cast("double").alias("n_reachable_pairs_est"),
-            )
-            .select(
-                F.lit(t).alias("t"), "n_nodes", "n_reachable_pairs_est"
-            )
+        return folded.select(
+            "node", F.round(est, decimals).cast("decimal(18,4)").alias("__e")
         )
 
-    out = _n_t(regs, 0)
-    for t in range(1, rounds + 1):
+    balls = [ball(regs)]
+    for _ in range(rounds):
         neigh = adj.join(
             regs.withColumnRenamed("node", "v"), "v"
         ).select(F.explode("__us").alias("node"), "idx", "rho")
@@ -984,7 +942,38 @@ def hyperball(
             .agg(F.max("rho").alias("rho"))
             .transform(truncate)
         )
-        out = out.unionByName(_n_t(regs, t))
+        balls.append(ball(regs))
+    return adj, balls
+
+
+def hyperball(
+    edges: DataFrame,
+    rounds: int = 3,
+    p: int = 7,
+    src: str = "src",
+    dst: str = "dst",
+    decimals: int = 4,
+) -> DataFrame:
+    """HyperBall (Boldi & Vigna 2011): estimate the neighborhood
+    function N(t) = number of (u, v) pairs with dist(u, v) <= t by
+    giving every node an HLL counter of its ball and iterating
+    register-wise MAX over neighbors — the sketch that made
+    average-distance / effective-diameter computation feasible on
+    billion-node graphs. Sweep and per-node estimates:
+    _hyperball_balls; N(t) sums the rounded estimates through DECIMAL
+    so aggregation order cannot change the hash.
+
+    Returns one row per t in 0..rounds:
+    (t, n_nodes, n_reachable_pairs_est).
+    """
+    adj, balls = _hyperball_balls(edges, src, dst, rounds, p, decimals)
+    out = None
+    for t, ball in enumerate(balls):
+        n_t = ball.agg(
+            F.count(F.lit(1)).cast("long").alias("n_nodes"),
+            F.sum("__e").cast("double").alias("n_reachable_pairs_est"),
+        ).select(F.lit(t).alias("t"), "n_nodes", "n_reachable_pairs_est")
+        out = n_t if out is None else out.unionByName(n_t)
     return _release(out, adj)
 
 
@@ -1007,68 +996,25 @@ def personalized_pagerank_integer(
     results are bit-exact in any aggregation order and the unrolled
     DuckDB CTE is a value oracle.
 
-    Scale: identical per-iteration shape to pagerank_integer
-    (adjacency-roster iteration, optimization r12 — one node-sized
-    rank shuffle into the persisted roster join per round); the
-    personalization changes only the restart term. ``dedup_edges``:
-    see pagerank_integer."""
-    roster_agg = F.collect_set if dedup_edges else F.collect_list
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")),
-        "__src", "__dst", roster_agg, "__ds", salts,
-    ).persist()
-    nodes = (
-        adj.select(F.col("__src").alias("node"))
-        .unionByName(adj.select(F.explode("__ds").alias("node")))
-        .distinct()
-        .persist()
-    )
-    owned = [adj, nodes]
-    base_seed = units * (100 - damping_pct) // 100
-    restart = F.when(
-        F.col("node") == seed_node, F.lit(int(base_seed))
-    ).otherwise(F.lit(0)).cast("long")
-    # degree carried inside the iterated state (see pagerank)
-    nd = (
-        nodes.join(
-            _roster_sizes(adj, "__src", "__ds", "node", "__deg", salts),
-            "node",
-            "left",
+    Scale: the same _power_iteration loop as pagerank_integer; the
+    personalization changes only the initial rank and the restart
+    term, neither of which needs the node count, so no count job runs
+    (and an empty edge list returns an empty frame through the loop).
+    ``dedup_edges``: see pagerank_integer."""
+    seed = F.col("node") == seed_node
+
+    def step(_n):
+        return _integer_step(
+            F.when(seed, F.lit(int(units))).otherwise(F.lit(0)).cast("long"),
+            F.when(seed, F.lit(int(units * (100 - damping_pct) // 100)))
+            .otherwise(F.lit(0))
+            .cast("long"),
+            damping_pct,
         )
-        .select("node", F.coalesce("__deg", F.lit(0)).alias("__deg"))
-        .persist()
-    )
-    owned.append(nd)
-    ranks = nd.withColumn(
-        "__r",
-        F.when(F.col("node") == seed_node, F.lit(int(units)))
-        .otherwise(F.lit(0))
-        .cast("long"),
-    ).cache()
-    for _ in range(iters):
-        per_src = ranks.filter(F.col("__deg") > 0).select(
-            F.col("node").alias("__src"),
-            F.expr("__r div __deg").alias("__c"),
-        )
-        contrib = adj.join(per_src, "__src").select(
-            F.explode("__ds").alias("node"), "__c"
-        )
-        summed = contrib.groupBy("node").agg(F.sum("__c").alias("__s"))
-        new = nd.join(summed, "node", "left").select(
-            "node",
-            "__deg",
-            (
-                restart
-                + F.expr(f"({damping_pct} * coalesce(__s, 0L)) div 100")
-            ).alias("__r"),
-        )
-        old = ranks
-        ranks = new.cache()
-        old.unpersist()
-    return _release(
-        ranks.select("node", F.col("__r").cast("long").alias(rank_col)),
-        ranks, *owned,
+
+    return _power_iteration(
+        edges, src, dst, iters, rank_col,
+        F.collect_set if dedup_edges else F.collect_list, step,
     )
 
 
@@ -1083,8 +1029,8 @@ def hyperball_harmonic(
     """Harmonic centrality estimated from HyperBall counters: for every
     node, sum (|B(t)| - |B(t-1)|) / t over t = 1..rounds — each new
     node reached at distance t contributes 1/t. The centrality ranking
-    a billion-node graph cannot get from per-node BFS; same bounded
-    register state as hyperball.
+    a billion-node graph cannot get from per-node BFS; same sweep and
+    bounded register state as hyperball (_hyperball_balls).
 
     Exact-integer contract: per-(node, t) ball estimates land on the
     10^-decimals lattice as longs; deltas multiply by lcm(1..rounds)/t
@@ -1094,77 +1040,18 @@ def hyperball_harmonic(
     """
     import math
 
-    from radient_spark.operators.sketch import hll_alpha
-
-    m = 1 << p
-    numer = hll_alpha(m) * m * m * float(1 << 50)
     lcm = math.lcm(*range(1, rounds + 1))
-    # Adjacency-roster form — see hyperball (optimization r12).
-    salts = _roster_salts()
-    adj = _roster(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .filter(F.col("u") != F.col("v")),
-        "v", "u", F.collect_set, "__us", salts,
-    ).persist()
-    adj.count()  # eager: build the roster once before the rounds
-    h = F.conv(
-        F.substring(F.md5(F.col("node").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    regs = (
-        _roster_keys(adj, "v", salts)
-        .select(F.col("v").alias("node"))
-        .select(
+    adj, balls = _hyperball_balls(edges, src, dst, rounds, p, decimals)
+    joined = None
+    for t, ball in enumerate(balls):
+        lat = ball.select(
             "node",
-            (h % m).alias("idx"),
-            F.when(F.shiftright(h, p) == 0, F.lit(61 - p))
-            .otherwise(
-                F.lit(61 - p) - F.length(F.conv(F.shiftright(h, p), 10, 2))
-            )
-            .alias("rho"),
+            (F.col("__e") * F.lit(10**decimals)).cast("long").alias(f"e{t}"),
         )
-        # lazy — see hyperball: deterministic registers, one _release
-        # job materializes the whole sweep (guide §1.2)
-        .transform(truncate)
-    )
-
-    def _est_lattice(r: DataFrame, out: str) -> DataFrame:
-        folded = r.groupBy("node").agg(
-            F.count(F.lit(1)).alias("n_set"),
-            F.sum(F.pow(F.lit(2.0), 50 - F.col("rho")).cast("long")).alias(
-                "s_set"
-            ),
-        )
-        s_total = F.col("s_set") + (F.lit(m) - F.col("n_set")) * F.lit(1 << 50)
-        zeros = F.lit(m) - F.col("n_set")
-        e_raw = F.lit(numer) / s_total.cast("double")
-        est = F.when(
-            (e_raw <= 2.5 * m) & (zeros > 0),
-            F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double")),
-        ).otherwise(e_raw)
-        lat = (
-            F.round(est, decimals).cast("decimal(18,4)")
-            * F.lit(10**decimals)
-        ).cast("long")
-        return folded.select("node", lat.alias(out))
-
-    balls = _est_lattice(regs, "e0")
-    for t in range(1, rounds + 1):
-        neigh = adj.join(
-            regs.withColumnRenamed("node", "v"), "v"
-        ).select(F.explode("__us").alias("node"), "idx", "rho")
-        regs = (
-            regs.unionByName(neigh)
-            .groupBy("node", "idx")
-            .agg(F.max("rho").alias("rho"))
-            .transform(truncate)
-        )
-        balls = balls.join(_est_lattice(regs, f"e{t}"), "node")
+        joined = lat if joined is None else joined.join(lat, "node")
     harm = None
     for t in range(1, rounds + 1):
         term = (F.col(f"e{t}") - F.col(f"e{t - 1}")) * F.lit(lcm // t)
         harm = term if harm is None else harm + term
-    out = balls.select("node", harm.cast("long").alias("harmonic_lattice"))
+    out = joined.select("node", harm.cast("long").alias("harmonic_lattice"))
     return _release(out, adj)

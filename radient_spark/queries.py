@@ -21,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from radient_spark.catalog import load_tables, register_views
+from radient_spark.catalog import _WIDEN_MAX_BYTES, load_tables, register_views
 from radient_spark.functions import vector as V
 from radient_spark.operators import dedup as D
 from radient_spark.operators.asof import asof_join
@@ -97,11 +97,6 @@ def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for df's optimized plan (private API;
     callers treat any failure as 'unknown' and skip the widen)."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-# ~2 x the default spark.sql.files.maxPartitionBytes: above this the scan
-# splits by bytes on its own and widening would only add an exchange.
-_WIDEN_MAX_BYTES = 256 * 1024 * 1024
 
 
 def _disc_price():

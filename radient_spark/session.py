@@ -30,9 +30,14 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
     - Arrow on: every Pandas-UDF boundary is columnar.
     - shuffle.partitions sized to the local core count (driver harness);
       a cluster deployment overrides via spark-submit conf.
+    - Join strategy: shuffled-hash preferred over sort-merge, with a
+      64m AQE local-map threshold; a deployment overrides either through
+      SPARK_GRAFT_EXTRA_CONF.
     - Partition discovery stays on the driver (no listing job when an
       index or claim log is loaded); a deployment can lower the
       threshold again through SPARK_GRAFT_EXTRA_CONF.
+    - SPARK_GRAFT_EXTRA_CONF ("k1=v1;k2=v2") is applied last, so it can
+      set any Spark conf, including every default above.
     - Driver heap: SPARK_GRAFT_DRIVER_MEM, else half of physical RAM
       capped at 48g (_driver_mem_for).
     """
@@ -54,15 +59,12 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
         # (interleaved min-of-3, 12 join-heavy queries): 50.5s -> 47.5s,
         # no regressions (q21 2.69->2.25, q_entity_resolution
         # 5.10->4.36, q_kcore_suppliers 3.57->3.13). At cluster scale
-        # the threshold bounds build-side memory per task; both knobs
-        # are env-overridable for deployments with tighter executors.
+        # the threshold bounds build-side memory per task; deployments
+        # with tighter executors override both through
+        # SPARK_GRAFT_EXTRA_CONF.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
         .config(
             "spark.driver.memory",

@@ -708,6 +708,14 @@ def stateful_sessions(
     open sessions; events inside each Arrow batch are sorted and
     gap-split in pandas (the per-group imperative logic that justifies
     the Pandas-with-state API over built-in windows).
+
+    The inactivity timeout is a processing-time timeout, and with one
+    Spark asks for a further no-data batch after every micro-batch (to
+    fire timeouts), so a query over this operator never runs out of
+    work: under an ``availableNow`` trigger it never terminates, and
+    ``processAllAvailable()`` never returns. Run it on a processing-time
+    trigger, or watch ``recentProgress`` until the input is read and
+    then ``stop()`` the query.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -285,6 +285,13 @@ def test_ivf_delete_and_tombstones(spark, emb, tmp_path):
         {r["id"] for r in again.index_df.select("id").collect()} & gone_ids
     )
 
+    # a new index saved over the path drops the old tombstones: they
+    # named rows of the old index and would hide the new one's rows
+    idx.tombstone_save(gone, p)
+    idx.save(p)
+    assert not _local_parquet_exists(f"{p}/tombstones")
+    assert IvfIndex.load(spark, p).index_df.count() == n
+
 
 def test_ivf_compact_emptied_cell_no_resurrection(spark, emb, tmp_path):
     """Round-6 (ADVICE): tombstoning EVERY row of a cell then compacting

@@ -497,8 +497,12 @@ def test_round5_graph_ops_on_degenerate_inputs(spark):
     peeling/label family; seeds survive BFS with depth 0)."""
     from radient_spark.operators.graph import (
         bfs_layers,
+        hyperball,
+        hyperball_harmonic,
         kcore,
         label_propagation,
+        local_clustering,
+        triangle_count,
         wl_colors,
     )
 
@@ -510,6 +514,15 @@ def test_round5_graph_ops_on_degenerate_inputs(spark):
     assert bfs_layers(empty, seeds, 2).collect() == [(1, 0)]
     loops = spark.createDataFrame([(1, 1)], "src long, dst long")
     assert kcore(loops, k=1, rounds=2).count() == 0
+    # self-loops are dropped, so a self-loop-only graph has no nodes:
+    # HyperBall still reports every t, with no nodes and a NULL estimate
+    for g in (empty, loops):
+        assert sorted(tuple(r) for r in hyperball(g, rounds=2).collect()) == [
+            (0, 0, None), (1, 0, None), (2, 0, None)
+        ]
+        assert hyperball_harmonic(g, rounds=2).collect() == []
+        assert tuple(triangle_count(g).collect()[0]) == (0, 0, 0)
+        assert local_clustering(g).collect() == []
 
 
 def test_round5_tabular_ops_on_degenerate_inputs(spark):

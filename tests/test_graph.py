@@ -57,9 +57,16 @@ def test_pagerank_integer_close_to_float_and_deterministic(spark):
 
 
 def test_pagerank_empty_edges(spark):
+    from radient_spark.operators.graph import personalized_pagerank_integer
+
     df = spark.createDataFrame([], "src long, dst long")
     assert pagerank(df).count() == 0
     assert pagerank_integer(df).count() == 0
+    assert personalized_pagerank_integer(df, seed_node=1).collect() == []
+    # a lone self-loop on the seed keeps all of the seed's mass
+    loop = spark.createDataFrame([(1, 1)], "src long, dst long")
+    got = personalized_pagerank_integer(loop, seed_node=1).collect()
+    assert [tuple(r) for r in got] == [(1, 10**12)]
 
 
 def test_pagerank_empty_edges_releases_caches(spark):
@@ -541,6 +548,11 @@ def test_roster_salt_split_results_identical(spark, monkeypatch):
     assert salted_pr.keys() == base_pr.keys()
     for n, v in base_pr.items():
         assert abs(salted_pr[n] - v) < 1e-12
+    # a value that is not an integer is refused, naming the variable,
+    # instead of silently meaning 1
+    monkeypatch.setenv("SPARK_GRAFT_ROSTER_SALTS", "four")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_ROSTER_SALTS"):
+        G.label_propagation(edges, rounds=2)
 
 
 def test_roster_salts_resolved_once_per_operator_call(spark, monkeypatch):

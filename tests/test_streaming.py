@@ -668,7 +668,19 @@ def test_stateful_sessionizer_flushes_completed_sessions(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    # A processing-time state timeout makes every micro-batch ask for a
+    # further no-data batch, so this query never terminates on its own
+    # and processAllAvailable() never returns (see stateful_sessions):
+    # wait until a finished batch has read every input row, then stop.
+    try:
+        for _ in range(120):
+            if sum(p["numInputRows"] for p in q.recentProgress) >= len(rows):
+                break
+            q.awaitTermination(0.5)  # raises if the query failed
+        else:
+            raise AssertionError("sessionizer did not read its input in 60 s")
+    finally:
+        q.stop()
 
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events, r.n_purchases)
