@@ -927,12 +927,18 @@ def exact_group_quantiles(
 
     Ties are immaterial: the value at a given rank of the sorted
     multiset is unique even when row order among equal values is not.
+
+    Null contract (as histogram_order_statistic's): NULL values are
+    dropped before ranking, so n and every rank count non-null values
+    only, and a group with no non-null value has no output row.
     """
     spark = df.sparkSession
     P = num_partitions or spark.sparkContext.defaultParallelism
-    keyed = df.select(
-        F.col(group_col).alias("__g"), F.col(value_col).alias("__v")
-    ).persist()
+    keyed = (
+        df.select(F.col(group_col).alias("__g"), F.col(value_col).alias("__v"))
+        .filter(F.col("__v").isNotNull())
+        .persist()
+    )
     if P > 1:
         probs = [i / P for i in range(1, P)]
         bounds = sorted(set(keyed.stat.approxQuantile("__v", probs, 0.001)))
@@ -1029,10 +1035,10 @@ def histogram_order_statistic(
     Null contract: histogram rows with a NULL value are dropped before
     ranking. NULLs are not orderable values — Spark's default window
     ordering puts them FIRST while the DuckDB-oracle row_number ranks
-    them LAST, so a NULL bucket would silently shift every rank (and
-    exact_group_quantiles rejects nulls outright). Counts (n, ranks)
-    are therefore over non-null values only, matching SQL aggregate
-    semantics.
+    them LAST, so a NULL bucket would silently shift every rank
+    (exact_group_quantiles drops NULL values the same way). Counts (n,
+    ranks) are therefore over non-null values only, matching SQL
+    aggregate semantics.
     """
     hist = hist.filter(F.col(value_col).isNotNull())
     w_cum = (

@@ -2486,8 +2486,8 @@ def _cc_labels_with(pairs_sql: str) -> str:
     the pair set — the fixed point the iterative Spark propagation
     converges to."""
     return f"""
-WITH RECURSIVE pairs AS ({pairs_sql}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({pairs_sql}),
+edges AS MATERIALIZED (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION ALL
   SELECT id_b AS a, id_a AS b FROM pairs
@@ -2497,7 +2497,7 @@ walk AS (
   UNION
   SELECT w.id, e.b AS reach FROM walk w JOIN edges e ON w.reach = e.a
 ),
-labels AS (
+labels AS MATERIALIZED (
   SELECT id, LEAST(id, MIN(reach)) AS group_id FROM walk GROUP BY id
 )"""
 
@@ -2507,21 +2507,7 @@ def _cc_groups_sql(pairs_sql: str) -> str:
     reachability closure via a recursive CTE (UNION dedup terminates it),
     then min-label per component — exactly the fixed point the iterative
     Spark propagation converges to."""
-    return f"""
-WITH RECURSIVE pairs AS ({pairs_sql}),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-walk AS (
-  SELECT a AS id, b AS reach FROM edges
-  UNION
-  SELECT w.id, e.b AS reach FROM walk w JOIN edges e ON w.reach = e.a
-),
-labels AS (
-  SELECT id, LEAST(id, MIN(reach)) AS group_id FROM walk GROUP BY id
-)
+    return f"""{_cc_labels_with(pairs_sql)}
 SELECT group_id, COUNT(*) AS group_size, MIN(id) AS canonical_id
 FROM labels GROUP BY group_id HAVING COUNT(*) > 1
 """
@@ -9968,12 +9954,12 @@ def _srp_flags_sql(n_bits: int = 48, bands: int = 3, seed: int = 7) -> str:
     mask = (1 << width) - 1
     band_ids = ", ".join(str(i) for i in range(bands))
     return f"""
-WITH micro AS (
+WITH micro AS MATERIALIZED (
   SELECT vec_id,
     list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000, 0)
                                         AS BIGINT)) AS mv
   FROM embeddings
-), sig AS (
+), sig AS MATERIALIZED (
   SELECT vec_id,
     CAST(list_sum(list_transform(generate_series(1, {n_bits}), j ->
       CASE WHEN list_dot_product(
@@ -9981,10 +9967,10 @@ WITH micro AS (
              list_transform([{rows}][j], s -> CAST(s AS DOUBLE))) >= 0
            THEN (1::BIGINT << (j - 1)) ELSE 0 END)) AS BIGINT) AS srp
   FROM micro
-), banded AS (
+), banded AS MATERIALIZED (
   SELECT vec_id, i AS bi, (srp >> (i * {width})) & {mask} AS bv
   FROM sig, unnest([{band_ids}]) AS t(i)
-), owners AS (
+), owners AS MATERIALIZED (
   SELECT bi, bv, MIN(vec_id) AS owner FROM banded GROUP BY bi, bv
 )
 SELECT b.vec_id, MIN(o.owner) AS dup_of

@@ -525,39 +525,55 @@ def bloom_ingest_sink(
     """
     from radient_spark.operators.dedup import bloom_build, bloom_gate
 
+    def unseen(rows: DataFrame) -> DataFrame:
+        """`rows` whose text the corpus does not hold yet."""
+        spark = rows.sparkSession
+        if not _state_exists(spark, corpus_dir):
+            return rows
+        seen = (
+            spark.read.parquet(corpus_dir)
+            .select(F.md5(text_col).alias("__h"))
+            .distinct()
+        )
+        return (
+            rows.withColumn("__h", F.md5(text_col))
+            .join(seen, "__h", "left_anti")
+            .drop("__h")
+        )
+
     def step(df: DataFrame, bitmap) -> DataFrame:
-        spark = df.sparkSession
         batch = df.dropDuplicates([text_col])
-        if bitmap is not None:
+        # Each corpus append is recorded, before it is made, under the
+        # epoch marker of the bitmap it merges onto.  Finding that record
+        # means an earlier attempt on this same bitmap appended and then
+        # failed its commit, so the rows the bitmap calls new may be in
+        # the corpus already: verify all of them.
+        P, fs = _state_fs(df.sparkSession, bloom_dir)
+        marks = fs.globStatus(P(bloom_dir + "/_EPOCH-*")) or []
+        base = "".join(m.getPath().getName() for m in marks) or "none"
+        record = P(f"{bloom_dir}.append/{base}")
+        retry = fs.exists(record)
+        if retry:
+            fresh = unseen(batch)
+        elif bitmap is not None:
             gated = bloom_gate(batch, bitmap, text_col, m_bits, k)
             new = gated.filter(~F.col("maybe_dup")).drop("maybe_dup")
             maybe = gated.filter(F.col("maybe_dup")).drop("maybe_dup")
-            if _state_exists(spark, corpus_dir):
-                seen = (
-                    spark.read.parquet(corpus_dir)
-                    .select(F.md5(text_col).alias("__h"))
-                    .distinct()
-                )
-                verified = (
-                    maybe.withColumn("__h", F.md5(text_col))
-                    .join(seen, "__h", "left_anti")
-                    .drop("__h")
-                )
-            else:
-                verified = maybe
-            fresh = new.unionByName(verified)
+            fresh = new.unionByName(unseen(maybe))
         else:
             fresh = batch
         # materialize before the writes: both the corpus append and the
         # bitmap merge consume `fresh`, and the bitmap overwrite must
         # not observe a half-updated corpus read
         fresh = fresh.localCheckpoint(eager=True)
+        fs.delete(P(bloom_dir + ".append"), True)
+        fs.create(record, True).close()
         # the append lands before the bitmap commit, so the epoch marker
-        # also makes replay after a committed swap skip the append.  Not
-        # covered: a commit that fails after the append, whose retry
-        # appends again the rows the old bitmap calls new.
+        # also makes replay after a committed swap skip the append
         fresh.write.mode("append").parquet(corpus_dir)
-        merged = bloom_build(fresh.select(text_col), text_col, m_bits, k)
+        # a retry's bitmap also absorbs the rows the failed attempt appended
+        absorbed = batch if retry else fresh
+        merged = bloom_build(absorbed.select(text_col), text_col, m_bits, k)
         if bitmap is not None:
             merged = (
                 bitmap.unionByName(merged)

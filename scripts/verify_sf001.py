@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Pre-driver verification: run selected registry queries against their
 DuckDB oracles at the driver's sf0.01 scale, under the driver's own
-comparison protocol (order-insensitive, column-name-sorted value rows —
-tests/oracle_utils.compare_to_oracle mirrors it).
+protocol: a vanilla local[8] SparkSession (none of session.get_session's
+settings) and an order-insensitive comparison of column-name-sorted
+value rows (tests/oracle_utils.compare_to_oracle mirrors it).
 
 Usage:
     python scripts/verify_sf001.py [query ...]
@@ -23,41 +24,29 @@ import traceback
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from radient_spark.queries import QUERIES, _DRIVER_PRIORITY  # noqa: E402
-from radient_spark.session import get_session  # noqa: E402
+from coverage_ledger import load_history  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
-sys.path.insert(0, os.path.join(REPO))
+from radient_spark.queries import QUERIES, _DRIVER_PRIORITY  # noqa: E402
 from tests.oracle_utils import compare_to_oracle  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
-
-
-def _checked_ever() -> set[str]:
-    """Queries that have ever received a driver row. Parses the known
-    CORRECTNESS shape explicitly — top-level query-name keys only (the
-    old recursive key scan could both over-count incidental sub-keys
-    and miss list-nested records; flagged in round-8 ADVICE). Shared
-    logic with scripts/coverage_ledger.py."""
-    seen: set[str] = set()
-    for fname in os.listdir(REPO):
-        if not (fname.startswith("CORRECTNESS_r") and fname.endswith(".json")):
-            continue
-        with open(os.path.join(REPO, fname)) as f:
-            data = json.load(f)
-        if isinstance(data, dict):
-            seen.update(k for k, v in data.items()
-                        if isinstance(v, dict) and k in QUERIES)
-    return seen
 
 
 def main() -> None:
     if len(sys.argv) > 1:
         names = sys.argv[1:]
     else:
-        checked = _checked_ever()
+        os.chdir(REPO)  # load_history reads CORRECTNESS_r*.json here
+        checked = load_history()
         never = [k for k in QUERIES if k not in checked]
         names = list(dict.fromkeys(list(_DRIVER_PRIORITY) + never))
-    spark = get_session("radient_spark_verify")
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName("radient_spark_verify")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
     results: dict[str, str] = {}
     t0 = time.time()
     for i, name in enumerate(names):

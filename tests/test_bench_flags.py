@@ -7,6 +7,16 @@ from __future__ import annotations
 import bench
 
 
+def test_bench_lists_name_registry_queries():
+    # a renamed registry query fails here, not when the sweep reaches it
+    from radient_spark.queries import QUERIES
+
+    assert bench.SWEEP_EXCLUDED <= set(QUERIES)
+    assert set(bench.HEADLINE) <= set(QUERIES)
+    assert bench.SWEEP_EXCLUDED.isdisjoint(bench.BENCH_QUERIES)
+    assert bench.SWEEP_EXCLUDED | set(bench.BENCH_QUERIES) == set(QUERIES)
+
+
 def test_contamination_threshold():
     # 32-core host: gate at 0.125 * 32 = 4.0
     assert not bench._contaminated(0.3, 32)
@@ -229,6 +239,38 @@ def test_plan_sha_stable_and_config_sensitive(spark, sf_dir):
     for build in (lam, rdd):
         a2 = bench._plan_sha(build())
         assert a2 is not None and a2 == bench._plan_sha(build())
+
+    # a frame persisted and probed while building caches an executed
+    # adaptive plan, whose query stage and codegen span numbers follow
+    # the order its stages finished: only the numbering may change
+    import re
+    from types import SimpleNamespace as NS
+
+    def with_text(txt):
+        utils = NS(explainString=lambda qe, mode: txt)
+        jvm = NS(org=NS(apache=NS(spark=NS(sql=NS(api=NS(python=NS(
+            PythonSQLUtils=utils)))))))
+        return NS(sparkSession=NS(_jvm=jvm), _jdf=NS(queryExecution=lambda: None))
+
+    counts = spark.range(1000).selectExpr("id % 7 AS g").groupBy("g").count()
+    counts = counts.persist()
+    counts.stat.approxQuantile("count", [0.5], 0.01)
+    probed = counts.join(spark.range(7).withColumnRenamed("id", "g"), "g")
+    jvm = spark._jvm
+    txt = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+        probed._jdf.queryExecution(), "formatted"
+    )
+    counts.unpersist()
+    assert "QueryStage" in txt and "[codegen id : " in txt
+    stage = r"(QueryStage\nOutput \[\d+\]: \[[^\n]*\]\nArguments: )(\d+)"
+    renumbered = re.sub(r"(\[codegen id : )(\d+)", lambda m: m[1] + str(99 - int(m[2])), txt)
+    renumbered = re.sub(stage, lambda m: m[1] + str(99 - int(m[2])), renumbered)
+    assert renumbered != txt
+    assert bench._plan_sha(with_text(renumbered)) == bench._plan_sha(with_text(txt))
+    # which operators share a codegen span is structure: merging spans
+    # moves the sha
+    merged = re.sub(r"\[codegen id : \d+", "[codegen id : 1", txt)
+    assert bench._plan_sha(with_text(merged)) != bench._plan_sha(with_text(txt))
 
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:

@@ -315,6 +315,27 @@ def test_exact_group_quantiles_matches_naive(spark):
             want = float(vals[max(1, _m.ceil(q * len(vals))) - 1])
             assert got[(g, q)] == want, (g, q, got[(g, q)], want)
 
+    # NULL values are dropped before ranking, in one range and in four;
+    # a group with no non-null value has no row
+    nulls = spark.createDataFrame(
+        [("a", None), ("a", 1.0), ("a", 2.0), ("a", 3.0)]
+        + [("b", None), ("b", None), ("b", 5.0), ("c", None)],
+        "g string, v double",
+    )
+    for parts in (1, 4):
+        got = {
+            (r["g"], r["q"]): r["value"]
+            for r in exact_group_quantiles(
+                nulls, "g", "v", [0.5, 0.99], num_partitions=parts
+            ).collect()
+        }
+        assert got == {
+            ("a", 0.5): 2.0,
+            ("a", 0.99): 3.0,
+            ("b", 0.5): 5.0,
+            ("b", 0.99): 5.0,
+        }, parts
+
 
 def test_weighted_sample_biases_toward_heavy_rows(spark):
     """Exact-k, deterministic, and weight-biased: the average weight of

@@ -11,8 +11,10 @@ prose claim (round-9 VERDICT task 6):
 It runs inside the normal suite too (the registry-wide sf0.001 sweep in
 test_oracle.py stays the broad gate; this is the driver-scale gate on
 the rotation front). Queries with no oracle get the driver's weaker
-rows-only check. Session config fidelity (the driver uses a vanilla
-SparkSession) is covered separately by scripts/verify_sf001.py.
+rows-only check. This module runs on the suite's get_session session;
+session config fidelity is covered separately by
+scripts/verify_sf001.py, which runs the same comparison on a vanilla
+local[8] SparkSession, as the driver does.
 """
 
 from __future__ import annotations

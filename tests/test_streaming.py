@@ -1808,9 +1808,10 @@ def test_state_sink_crash_windows(spark, tmp_path, monkeypatch, name):
                 fn(batches[epoch], epoch)
             assert state(run) == want, (method, fail_epoch)
             if name == "bloom":
-                # the failed attempt's corpus append already landed, and
-                # the retry appends the rows its old bitmap calls new again
-                assert set(state(run, ".corpus")) == set(want_corpus)
+                # the failed attempt's corpus append already landed: the
+                # retry must not append the rows its old bitmap calls new
+                # again (a multiset comparison)
+                assert state(run, ".corpus") == want_corpus, (method, fail_epoch)
 
     # (3) the swap is interrupted between its two renames
     fn = batch_fn("swap")
